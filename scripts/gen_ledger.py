@@ -51,21 +51,10 @@ def _driver_history() -> dict[str, dict]:
 
 
 def _current_window() -> list[str]:
-    """The live driver window, round-agnostically (ADVICE r09 item 2).
-
-    Prefers the ``_CURRENT_WINDOW`` alias; falls back to the
-    highest-numbered ``_ROUND{N}_WINDOW`` attribute so a missing alias
-    can never silently report window_size 0.
+    """The live driver window. Read directly, so a renamed or missing
+    ``_CURRENT_WINDOW`` fails loudly instead of reporting window_size 0.
     """
-    win = getattr(qmod, "_CURRENT_WINDOW", None)
-    if win:
-        return list(win)
-    rounds = sorted(
-        (int(m.group(1)), name)
-        for name in dir(qmod)
-        for m in [re.match(r"_ROUND(\d+)_WINDOW$", name)] if m)
-    assert rounds, "no _CURRENT_WINDOW and no _ROUND*_WINDOW found"
-    return list(getattr(qmod, rounds[-1][1]))
+    return list(qmod._CURRENT_WINDOW)
 
 
 def build() -> dict:

@@ -54,6 +54,28 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     return ranks
 
 
+def order_copairs(items: DataFrame, key: str) -> DataFrame:
+    """Co-purchase edge list: two ``key`` values bought in one order
+    are linked, ``(u, v, w)`` with ``u < v`` and ``w`` the number of
+    distinct orders the pair shares — the edge relation of every
+    lineitem graph query (and the input ``triangle_count`` /
+    ``common_neighbor_counts`` expect).
+
+    ``(l_orderkey, key)`` rows are deduplicated first, so repeated
+    lines of one order count once. The self-join is keyed on the
+    order, so its fanout is bounded by order width (≤7 lines per
+    TPC-H order ⇒ ≤21 pairs), never |items|². Callers that need only
+    the unweighted edges select ``u, v``: Catalyst then prunes the
+    count out of the aggregate, leaving the plain pair distinct."""
+    li = items.select("l_orderkey", key).distinct()
+    a, b = li.alias("a"), li.alias("b")
+    return (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
+                   & (F.col(f"a.{key}") < F.col(f"b.{key}")))
+            .groupBy(F.col(f"a.{key}").alias("u"),
+                     F.col(f"b.{key}").alias("v"))
+            .agg(F.count("*").alias("w")))
+
+
 def _popcount_lut():
     """256-entry byte-popcount table for the bitmap kernels."""
     import numpy as np

@@ -74,507 +74,11 @@ from . import llm21  # noqa: E402,F401
 from . import analytics32  # noqa: E402,F401
 
 # --- driver-window ordering --------------------------------------------------
-# The verify driver checks the FIRST 50 registry entries per round
-# (CORRECTNESS_r01..r04.json == first 50 of insertion order).
-# Ledger after r04: 286 registered, 191 driver-checked-green (incl.
-# the documented no-oracle pca row), 2 driver-red (embedding_covariance
-# + embedding_quantile_bins — IEEE signed zero, fixed this round with
-# terminal `+ 0.0` canonicalization in oracle AND Spark expression,
-# plus the oracle_harness._norm copysign fix so the class reproduces
-# locally), 93 never-checked. Round 5's window: the 2 re-checks at
-# positions 0-1 (VERDICT r04 §next 2), then the first 48 of the
-# never-checked backlog in registration order; r06 takes the remaining
-# 45 and closes the ledger. All 50 are pre-flighted: DuckDB parity at
-# sf0.001/0.01/0.1 under TZ=America/New_York, and bit-stability under
-# hostile partitioning (tests/test_partitioning_robustness.py WINDOW).
-_ROUND5_WINDOW = [
-    # the two signed-zero re-checks first
-    "embedding_covariance", "embedding_quantile_bins",
-    # never-driver-checked backlog, registration order
-    "sketch_countmin_words", "sql_group_by_all",
-    "orders_yoy_revenue_growth", "part_price_histogram",
-    "text_keyword_in_context", "graph_common_neighbors",
-    "events_intergap_buckets", "nation_yearly_rank_change",
-    "ts_ewma_priority_revenue", "ts_cusum_nation_drift",
-    "corpus_boilerplate_shingles", "sketch_kmv_jaccard",
-    "stat_theil_sen_trend", "fact_key_skew_profile",
-    "dq_expectations_report", "agg_incremental_merge",
-    "ts_seasonal_decompose", "agg_winsorized_stats",
-    "join_fuzzy_blocked", "orders_decile_lift",
-    "bpe_learn_merges", "bpe_encode_apply",
-    "sample_poisson_bootstrap", "multimodal_frame_dedup",
-    "sim_recall_at_k_eval", "dedup_simhash_hamming",
-    "events_attribution_last_touch", "basket_association_rules",
-    "text_next_word_suggest", "orders_cohort_ltv",
-    "part_abc_classification", "orders_open_backlog_daily",
-    "graph_kcore_peel", "events_new_vs_returning",
-    "window_cume_dist_price", "ts_seasonal_naive_backtest",
-    "stat_spearman_rank", "pii_pseudonymize_fk",
-    "privacy_k_anonymity", "stat_mann_whitney_u",
-    "stat_ks_two_sample", "ts_autocorrelation_lags",
-    "graph_label_propagation", "hof_array_pipeline",
-    "join_null_safe_eq", "stat_benford_first_digit",
-    "stat_anova_oneway", "text_rake_keywords",
-]
-
-# --- round-6 window ---------------------------------------------------------
-# CORRECTNESS_r05 came back 50/50 green, so the r05 window rotates out.
-# This window is the first 50 of the 68 never-driver-checked queries
-# (registry order minus the union of CORRECTNESS_r01-r05 keys, per
-# VERDICT r05 §next 1): pca_variance_invariants leads (closing the one
-# non-green ledger row's companion), then the rounds-1-4 backlog and
-# the round-5 additions in registration order. The remaining 18
-# (graph_jaccard_link_prediction .. text_jsd_source_pairs) are pinned
-# directly after the window so r07 closes the ledger with positions
-# 50-67 intact regardless of import order. Registry growth is FROZEN
-# until the ledger closes (VERDICT r05 §next 3).
-# Pre-flight: parity at sf0.001/0.01/0.1 under TZ=America/New_York +
+# The verify driver checks the FIRST 50 registry entries, so the list
+# below is pinned to the front of the registry by ``_reorder``. Its
+# entries are pre-flighted for DuckDB parity and for bit-stability under
 # hostile partitioning (tests/test_partitioning_robustness.py).
-_ROUND6_WINDOW = [
-    "pca_variance_invariants", "privacy_dp_histogram",
-    "rfm_migration_matrix", "sample_neyman_allocation",
-    "map_functions_surface", "ts_cross_correlation",
-    "embedding_pq_codebook", "sim_ann_pq_adc",
-    "cluster_dbscan_lsh", "sim_ann_ivfadc",
-    "embedding_top_eigvec_power", "stat_kruskal_wallis",
-    "stat_wilcoxon_signed_rank", "stat_kendall_tau",
-    "funnel_time_to_convert", "dedup_doc_edge_overlap",
-    "docs_ngram_novelty", "ts_changepoint_pettitt",
-    "privacy_l_diversity", "sim_matryoshka_eval",
-    "graph_hits_hubs_authorities", "stat_levene_test",
-    "stat_mann_kendall_trend", "stat_poisson_rate_test",
-    "events_markov_stationary", "ts_holt_linear_forecast",
-    "ts_periodogram", "stat_friedman_test",
-    "asof_nearest_purchase", "multimodal_scene_cuts",
-    "stat_jarque_bera", "ivm_join_agg_delta",
-    "stat_runs_test", "graph_degree_assortativity",
-    "dedup_minhash_pr_sweep", "dedup_semantic_lexical_pairs",
-    "curation_dedup_funnel", "graph_clustering_coefficient",
-    "tokenizer_oov_sweep", "stat_cochran_armitage",
-    "orders_repeat_purchase_curve", "stat_ols_two_features",
-    "text_chi2_keyness", "embedding_drift_centroid_shift",
-    "asof_tolerance_recent_order", "events_lifecycle_accounting",
-    "sample_class_balance", "nb_lang_classifier",
-    "shard_token_budget_assign", "curation_perplexity_filter",
-    # --- r07 closing window (positions 50-67; never-checked tail) ---
-    "graph_jaccard_link_prediction", "skyline_price_size",
-    "rolling_ols_slope_30d", "dedup_basket_setsim",
-    "events_attribution_linear", "sim_ann_multiprobe",
-    "text_keyphrase_textrank", "sim_item_cooccurrence_cosine",
-    "survival_km_ship_latency", "sim_maxsim_late_interaction",
-    "dq_psi_price_drift", "graph_adamic_adar",
-    "sessions_peak_concurrency", "text_feature_hash_retrieval",
-    "sketch_hll_intersect_estimate", "events_attribution_markov_removal",
-    "sessions_entry_exit_bounce", "text_jsd_source_pairs",
-]
-
-# --- round-7 window ---------------------------------------------------------
-# CORRECTNESS_r06 came back 50/50 green; this window CLOSES THE LEDGER
-# (VERDICT r06 §next 1): positions 0-17 are the 18 never-driver-checked
-# queries (the pinned r06 tail, registry order), so after this round
-# every one of the 309 registered queries has a driver CORRECTNESS row.
-# Positions 18-49 are the highest-value re-checks, in priority order:
-#  - 18-21: every row that was EVER driver-red (embedding_covariance /
-#    embedding_quantile_bins: r04 signed-zero, fixed+green r05;
-#    json_parse / json_props_extract: r01 oracle-typing artifact,
-#    green r02) — re-certified on current code;
-#  - 22-24: the eigen siblings + the applyInPandas surface
-#    (pca_variance_invariants, embedding_top_eigvec_power,
-#    pandas_grouped_zscore);
-#  - 25-32: the EIGHT queries whose Spark AND oracle expressions were
-#    edited by this round's int64-overflow audit (rank-sum/moment
-#    accumulators promoted to DECIMAL(38,0); see COVERAGE.md r07) —
-#    the exact class that must not be assumed green from old parity;
-#  - 33-49: the bench headliners / heaviest kernels (dedup families,
-#    BM25/tf-idf, as-of/range joins, TPC-H heavies, graph sidecars).
-# Pre-flight: parity at sf0.001/0.01/0.1 under TZ=America/New_York +
-# hostile partitioning (tests/test_partitioning_robustness.py).
-_ROUND7_WINDOW = [
-    # 0-17: never-driver-checked tail — the ledger closers
-    "graph_jaccard_link_prediction", "skyline_price_size",
-    "rolling_ols_slope_30d", "dedup_basket_setsim",
-    "events_attribution_linear", "sim_ann_multiprobe",
-    "text_keyphrase_textrank", "sim_item_cooccurrence_cosine",
-    "survival_km_ship_latency", "sim_maxsim_late_interaction",
-    "dq_psi_price_drift", "graph_adamic_adar",
-    "sessions_peak_concurrency", "text_feature_hash_retrieval",
-    "sketch_hll_intersect_estimate", "events_attribution_markov_removal",
-    "sessions_entry_exit_bounce", "text_jsd_source_pairs",
-    # 18-24: ever-red rows + eigen siblings + pandas surface
-    "embedding_covariance", "embedding_quantile_bins", "json_parse",
-    "json_props_extract", "pca_variance_invariants",
-    "embedding_top_eigvec_power", "pandas_grouped_zscore",
-    # 25-32: this round's overflow-audit edits (both sides touched)
-    "stat_mann_whitney_u", "stat_ks_two_sample", "ts_autocorrelation_lags",
-    "stat_kruskal_wallis", "sample_neyman_allocation",
-    "fact_key_skew_profile", "agg_winsorized_stats", "stat_spearman_rank",
-    # 33-49: bench headliners and heavy kernels
-    "dedup_minhash_lsh", "dedup_ngram_jaccard", "dedup_embedding_cosine",
-    "bloom_semi_join_prune", "q21_sole_returner", "sketch_hll_distinct",
-    "text_tfidf_top_terms", "text_search_bm25", "asof_join_latest_order",
-    "range_join_event_pairs", "agg_pricing_summary", "join_shipping_priority",
-    "q9_product_profit", "split_5way_log", "graph_triangle_count",
-    "recursive_trade_reach", "sim_topk_int8_rerank",
-]
-
-
-# --- round-8 window ---------------------------------------------------------
-# CORRECTNESS_r07 came back 50/50 green, closing the ledger for every
-# query registered through round 6. This window (VERDICT r07 §next 1):
-#  - 0-30: the 31 round-7 additions, none of which has a driver row yet
-#    (registry order) — after this round the ledger closes again with
-#    every registered query driver-checked;
-#  - 31: embedding_pca_project — rewritten this round from the rows-only
-#    eigh entry to a fully oracle-backed power-iteration projection
-#    (VERDICT r07 §next 2); its first driver row clears the last
-#    never-green ledger entry;
-#  - 32-49: re-checks by edit recency: queries whose Spark kernels were
-#    edited in round 7 (graph_common_neighbors adaptive-bitmap OOM fix
-#    79679a3, graph_degree_assortativity rewrite 84f96b6,
-#    stat_theil_sen_trend af0f5fe, ts_seasonal_naive_backtest 913ab12,
-#    ts_sliding_window, basket_association_rules 658fb13), then family
-#    siblings of round-7 kernels (k-core peel/label-prop/clustering/
-#    HITS next to graph_kcore_peeling; rank-stat siblings of the
-#    overflow audit; CUSUM + KMV siblings of the new fold queries;
-#    simhash next to dedup_repeated_substring; IVF/PQ next to RVQ;
-#    token-budget shard next to byte-budget shards).
-# Pre-flight: parity at sf0.001/0.01/0.1 under TZ=America/New_York +
-# hostile partitioning (tests/test_partitioning_robustness.py).
-_ROUND8_WINDOW = [
-    # 0-30: round-7 additions, never driver-checked (registry order)
-    "kv_ttl_expiry_sweep", "events_attribution_shapley",
-    "graph_kcore_peeling", "stream_session_late_closed",
-    "stream_join_click_purchase_window", "sketch_histogram_quantiles",
-    "sketch_histogram_quantiles_by_type", "sketch_kmv_distinct_by_type",
-    "sample_priority_topk", "dedup_repeated_substring",
-    "sim_ann_nprobe_recall_sweep", "sketch_bloom_fpr_sweep",
-    "layout_zonemap_pruning", "dq_freshness_by_type",
-    "events_salting_load_balance", "ts_pattern_similarity_search",
-    "events_attribution_time_decay", "ts_ohlc_bars",
-    "ts_dtw_distance", "events_cusum_changepoint",
-    "ts_seasonal_naive_mase", "ts_resample_linear_interp",
-    "curation_blocklist_filter", "multimodal_caption_align_filter",
-    "multimodal_shard_bytes_assign", "embedding_rq_codebook",
-    "sim_ann_rq_adc", "sim_ann_dim_prefix_recall",
-    "split_cluster_leakage_safe", "text_pmi_collocations",
-    "er_survivorship_golden_record",
-    # 31: the rewritten projection — first oracle-backed driver row
-    "embedding_pca_project",
-    # 32-37: round-7-edited kernels
-    "graph_common_neighbors", "graph_degree_assortativity",
-    "stat_theil_sen_trend", "ts_seasonal_naive_backtest",
-    "ts_sliding_window", "basket_association_rules",
-    # 38-49: family siblings of round-7 work
-    "graph_kcore_peel", "graph_label_propagation",
-    "graph_clustering_coefficient", "graph_hits_hubs_authorities",
-    "stat_wilcoxon_signed_rank", "stat_kendall_tau",
-    "ts_cusum_nation_drift", "sketch_kmv_jaccard",
-    "dedup_simhash_hamming", "sim_ann_ivfadc",
-    "sim_ann_pq_adc", "shard_token_budget_assign",
-]
-
-
-# --- round-9 window ---------------------------------------------------------
-# CORRECTNESS_r08 came back 50/50 green. This window (VERDICT r08 §next 1)
-# closes the ledger at 371/371 driver-certified:
-#  - 0-30: the 31 round-8 additions, none of which has a driver row yet
-#    (registry order: computed as registered minus union of
-#    CORRECTNESS_r01-r08 keys) — includes the wave-1..13 analytics/LLM
-#    entries plus the KV/regexp/agg tails;
-#  - 31-33: this round's kernel edits (delta-peeled k-core, the
-#    cosine-kernel guard profile, the pca-projection sibling of the
-#    r08 localCheckpoint fix) — edit-recency re-checks;
-#  - 34-49: bench headliners and heaviest kernels re-certified on
-#    current code (same set as the r07 positions 33-49 rationale).
-# Pre-flight: parity at sf0.001/0.01/0.1 under TZ=America/New_York +
-# hostile partitioning (tests/test_partitioning_robustness.py).
-_ROUND9_WINDOW = [
-    # 0-30: round-8 additions, never driver-checked (registry order)
-    "embedding_pca_top2_project", "dq_referential_orphans",
-    "curation_mix_temperature", "ts_hurst_rs",
-    "sample_bottomk_uniform", "graph_ppr_seeded",
-    "ts_match_recognize_vshape", "stat_logistic_newton",
-    "events_top_conversion_paths", "dq_duplicate_key_report",
-    "privacy_t_closeness", "events_dau_wau_stickiness",
-    "ts_sax_symbolize", "kv_scan_match_cursor",
-    "kv_incrby_counter_fold", "regexp_functions_surface",
-    "agg_mode_deterministic", "stat_wilson_lower_bound",
-    "stat_gini_revenue_concentration", "ts_pacf_durbin",
-    "er_blocking_quality", "embedding_knn_graph",
-    "text_heaps_law", "multimodal_vad_segments",
-    "text_phrase_proximity", "text_code_prose_score",
-    "sim_hybrid_rrf_fusion", "text_kneser_ney_bigram",
-    "multimodal_ahash_dedup", "embedding_outlier_mahalanobis_diag",
-    "curation_mmr_diverse_select",
-    # 31-33: round-9 kernel edits (edit recency)
-    "graph_kcore_peeling", "dedup_embedding_cosine",
-    "embedding_pca_project",
-    # 34-49: bench headliners / heaviest kernels on current code
-    "split_5way_log", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "bloom_semi_join_prune", "q21_sole_returner", "sketch_hll_distinct",
-    "text_tfidf_top_terms", "text_search_bm25", "asof_join_latest_order",
-    "range_join_event_pairs", "agg_pricing_summary", "q9_product_profit",
-    "graph_triangle_count", "recursive_trade_reach",
-    "sim_topk_int8_rerank", "pandas_grouped_zscore",
-]
-
-
-# Round-10 driver window (VERDICT r09 §next 1):
-#  - 0-22: the 23 round-9 additions, registered after the r9 window
-#    was pinned so never driver-checked — certifying them closes the
-#    ledger at 394/394 (first fully-closed registry since r7);
-#  - 23-…: round-10 additions (registered this round, window-included
-#    immediately so they certify the same round — the lag that kept
-#    the ledger open in r8/r9 is structural and this kills it);
-#  - tail: edit-recency re-checks (dedup_embedding_cosine after the
-#    _record_kernel cap fix, events_retention_bitmap_index after the
-#    integer-div fix — also in 0-22) plus the heaviest bench kernels
-#    re-certified on current code.
-# Pre-flight: parity at sf0.001/0.01/0.1 under TZ=America/New_York +
-# hostile partitioning (tests/test_partitioning_robustness.py).
-_ROUND10_WINDOW = [
-    # 0-22: round-9 additions, never driver-checked (registry order)
-    "ts_yule_walker_ar2", "graph_katz_centrality",
-    "graph_hyperanf_reachable_pairs", "stat_hodges_lehmann_shift",
-    "ts_croston_intermittent", "stat_mood_median_test",
-    "dq_outlier_mad_robust", "stat_ansari_bradley_scale",
-    "stat_grubbs_test", "ts_ljung_box", "dedup_cdc_chunking",
-    "multimodal_phash_dct", "multimodal_audio_landmarks",
-    "text_lang_id_cavnar_trenkle", "text_burrows_delta",
-    "curation_submodular_coverage", "layout_hilbert_order",
-    "events_retention_bitmap_index", "sample_kcenter_greedy",
-    "ts_changepoint_binseg", "embedding_knn_descent_round",
-    "sim_knn_graph_greedy_search", "sim_ann_two_layer_search",
-    # 23-…: round-10 additions (window-included at registration)
-    "dedup_containment_lsh_ensemble", "curation_dsir_importance",
-    "sim_binary_hamming_index", "multimodal_dhash_dedup",
-    "vocab_coverage_curve", "stat_cramers_v", "stat_cohens_kappa",
-    "graph_degree_powerlaw_fit", "stat_brunner_munzel",
-    "ts_theta_forecast", "text_msttr_diversity",
-    "privacy_randomized_response",
-    # tail: edit-recency + heaviest kernels on current code
-    "dedup_embedding_cosine", "graph_kcore_peeling",
-    "split_5way_log", "dedup_minhash_lsh", "dedup_ngram_jaccard",
-    "dedup_basket_setsim", "graph_ppr_seeded",
-    "embedding_pca_top2_project", "embedding_knn_graph",
-    "bloom_semi_join_prune", "q21_sole_returner", "q9_product_profit",
-    "sketch_hll_distinct", "text_tfidf_top_terms", "text_search_bm25",
-]
-
-# Round-11 driver window (VERDICT r10 §next 1):
-#  - 0-14: the 15 round-10 post-window additions — the only registered
-#    queries without a driver CORRECTNESS row (registered after the r10
-#    window was pinned; all parity-green in the r10 close gate).
-#    Certifying them closes the ledger at 421/421 for the first time.
-#  - 15-49: staleness re-checks, oldest `last_round` first — the 35
-#    oldest rows are all r01-certified (KV/scalar/join/window/ts tails
-#    that have not been driver-re-checked in 10 rounds), taken in
-#    registry order within the round-1 cohort.
-# Pre-flight: parity at sf0.001/0.01/0.1 under TZ=America/New_York +
-# hostile partitioning (tests/test_partitioning_robustness.py).
-_ROUND11_WINDOW = [
-    # 0-14: round-10 additions, never driver-checked (registry order)
-    "dedup_minhash_containment_estimate", "embedding_intrinsic_dim_mle",
-    "text_ndcg_search_eval", "sim_binary_pool_recall_sweep",
-    "stat_mcnemar", "stat_cohens_d", "graph_rich_club_coefficient",
-    "sample_horvitz_thompson", "ts_seasonal_mann_kendall",
-    "orders_nelson_aalen_hazard", "stat_signflip_permutation_test",
-    "events_interpurchase_gamma_fit", "events_markov_perplexity",
-    "stat_f_test_variance_ratio", "privacy_rappor_histogram",
-    # 15-49: oldest-certified re-checks (all last driver-checked r01)
-    "project_flatten_common", "struct_pack_serialize",
-    "case_when_map_optype", "filter_isin_broadcast",
-    "route_dynamic_topic", "dim_upsert_kv", "kv_get", "kv_range_scan",
-    "kv_multi_get_set", "kv_list_set_ops", "kv_zset_ops",
-    "scalar_functions", "kv_put_upsert", "kv_delete",
-    "join_local_supplier_volume", "join_broadcast_dim_enrich",
-    "join_left_null_branch", "join_semi", "join_anti",
-    "agg_distinct_count", "agg_rollup", "agg_cube",
-    "setop_except_intersect", "sort_limit_topn", "window_running_sum",
-    "window_lag_lead", "window_rank_dense", "ts_tumbling_window",
-    "ts_session_window", "ts_dedup", "ts_watermark_recent",
-    "ts_user_retention", "ts_funnel_view_purchase", "dedup_exact",
-    "text_fingerprint",
-]
-
-# Round-12 driver window (VERDICT r11 §next 1):
-#  - 0-29: the 30 round-11 additions — the only registered queries
-#    without a driver CORRECTNESS row (registered after the r11 window
-#    was pinned; all parity-green in the r11 close gate AND in the
-#    judge's independent 30/30 run). Certifying them closes the ledger
-#    at 451/451 driver-certified for the first time.
-#  - 30-49: staleness re-checks, oldest `last driver check` first —
-#    the 5 remaining r01-certified rows not re-checked in r11, then
-#    the first 15 of the r02 cohort in registry order.
-# Pre-flight: parity at sf0.001/0.01/0.1 under TZ=America/New_York +
-# hostile partitioning (tests/test_partitioning_robustness.py).
-_ROUND12_WINDOW = [
-    # 0-29: round-11 additions, never driver-checked (registry order)
-    "sketch_kll_quantiles", "sketch_kll_quantiles_by_priority",
-    "dedup_semantic_cells", "text_readability_fk", "text_gtest_keyness",
-    "text_sumbasic_extract", "dedup_soft_weight", "text_hapax_ratio",
-    "stat_fisher_exact", "stat_benjamini_hochberg_fdr",
-    "stat_tost_equivalence", "ts_holt_winters_additive",
-    "privacy_exponential_mechanism", "survival_weibull_fit",
-    "stat_negbin_overdispersion", "graph_modularity_score",
-    "stat_conformal_interval", "stat_deming_regression",
-    "privacy_dp_median_em", "stat_mantel_haenszel_or",
-    "stat_capture_recapture", "ts_spectral_entropy",
-    "events_bot_regularity_score", "graph_degree_centralization",
-    "ts_peak_detection", "orders_price_elasticity_loglog",
-    "sim_rp_tree_recall", "text_rocchio_prf", "decontaminate_minhash",
-    "text_stopword_discovery",
-    # 30-34: the last r01-certified rows (oldest, registry order)
-    "dedup_minhash_signatures", "dedup_simhash", "sim_topk_bruteforce",
-    "sim_ann_lsh_bucket", "text_token_count",
-    # 35-49: oldest r02-certified rows, registry order
-    "source_file_batch", "text_quality_score", "text_lang_id",
-    "text_word_freq", "multimodal_meta", "text_search_match",
-    "dedup_connected_components", "sim_ann_lsh_or_pairs",
-    "curation_pipeline", "multimodal_frame_sample",
-    "multimodal_payload_b64", "explode_with_position",
-    "sim_ann_ivf_cells", "q7_volume_between_nations",
-    "q10_returned_items",
-]
-
-# Round-13 driver window (VERDICT r12 §next 1):
-#  - 0-6: the 7 round-12 additions — the only registered queries with
-#    no driver CORRECTNESS row (registered after the r12 window was
-#    pinned; all parity-green in the r12 close gate AND in the judge's
-#    independent 7/7 run). Certifying them closes the ledger at
-#    458/458 driver-certified — the first 100% round.
-#  - 7-49: staleness re-checks, oldest `last driver check` first —
-#    the 21 remaining r02-certified rows, then the first 22 of the
-#    r03 cohort in registry order.
-# Pre-flight: parity at sf0.001/0.01/0.1 under TZ=America/New_York +
-# hostile partitioning (tests/test_partitioning_robustness.py).
-_ROUND13_WINDOW = [
-    # 0-6: round-12 additions, never driver-checked (registry order)
-    "dedup_semantic_cells_scaled", "dedup_semantic_multiprobe",
-    "sim_ann_hierarchical_cells", "text_tokenizer_fertility_by_lang",
-    "text_bitext_mining_margin", "dedup_lsh_band_tuning",
-    "sample_inbatch_negatives",
-    # 7-27: the last r02-certified rows (oldest, registry order)
-    "q14_promo_share", "q18_large_volume_customers",
-    "q19_disjunctive_predicates", "q6_forecast_revenue",
-    "q2_best_supplier_per_part", "q8_market_share",
-    "q11_important_stock_value", "q12_priority_by_status",
-    "q13_customer_order_distribution", "q15_top_supplier",
-    "q16_supplier_count_by_part", "q17_small_quantity_revenue",
-    "q20_excess_shippers", "q22_idle_rich_customers",
-    "sketch_kmv_distinct", "sample_hash_bernoulli",
-    "sample_stratified_hash", "split_train_val_test",
-    "text_chunk_windows", "zorder_layout_key", "sketch_cms_frequency",
-    # 28-49: oldest r03-certified rows, registry order
-    "json_parse_corrupt_routing", "ts_resample_ffill",
-    "ts_multi_grain_rollup", "sql_entrypoint_correlated",
-    "scalar_subquery_filter", "window_percent_ntile",
-    "agg_grouping_sets", "agg_filtered_conditional", "string_functions",
-    "date_functions", "agg_median_percentiles", "agg_pivot",
-    "null_functions", "q4_order_priority_exists", "sketch_hll_per_group",
-    "sample_weighted_systematic", "string_levenshtein_pairs",
-    "window_range_30d_revenue", "window_first_last_nth",
-    "join_salted_skew", "unpivot_measures", "gaps_islands_orderkeys",
-]
-
-# Round-14 window (VERDICT r13 §next 1): the 2 never-driver-checked
-# r13-wave-2 additions + the 5 new r14 eval-report queries, then the
-# oldest re-checks (LEDGER last_round order: the 26 remaining
-# r03-certified rows, then the first 17 of the r04 cohort) to 50.
-# Certifying slots 0-1 closes every pre-r14 registration at
-# driver-green; slots 2-6 cover this round's additions.
-# Pre-flight: parity at sf0.001/0.01/0.1 under TZ=America/New_York +
-# hostile partitioning (tests/test_partitioning_robustness.py).
-_ROUND14_WINDOW = [
-    # 0-1: round-13 wave-2 additions, never driver-checked
-    "dedup_semantic_multiprobe_scaled", "dedup_paragraph_reconstruct",
-    # 2-6: round-14 eval-report wave (queries/llm21.py)
-    "report_contamination_by_source", "report_split_leakage_matrix",
-    "report_dedup_retention_funnel", "report_token_mix_by_quality",
-    "report_top_duplicated_chunks",
-    # 7-32: the 26 remaining r03-certified rows (oldest, registry order)
-    "agg_argmax_customer", "decontaminate_ngram", "text_repetition_stats",
-    "pii_scrub_redact", "dedup_incremental", "sim_ivf_kmeans_cells",
-    "seq_pack_contiguous", "text_char_entropy", "vocab_build_topk",
-    "profile_columns", "embedding_quantize_int8", "multimodal_image_tiles",
-    "lang_id_trigram", "text_bigram_lm_score", "dedup_lsh_verified",
-    "text_ngram_top", "scd2_user_history", "tokenize_with_vocab",
-    "sketch_hist_quantiles", "rfm_customer_segments",
-    "cohort_retention_matrix", "scd2_point_in_time_join",
-    "stat_linear_trend", "stat_corr_matrix", "stat_ttest_welch",
-    "stat_chi_square",
-    # 33-49: oldest r04-certified rows, registry order
-    "dedup_jaccard_capped", "asof_forward_next_purchase",
-    "sketch_hll_time_merge", "multimodal_audio_windows",
-    "event_path_transitions", "ts_anomaly_zscore", "events_dau_wau",
-    "dedup_normalized_exact", "embedding_norm_stats",
-    "stat_ab_proportion_ztest", "session_paths_top",
-    "funnel_3step_conversion", "events_hourly_seasonality",
-    "interval_join_session_overlap", "graph_pagerank_transitions",
-    "orders_ship_latency", "ts_moving_avg_pct_change",
-]
-
-# Round-15 window (VERDICT r14 §next 1): the 3 r14 wave-2 report
-# queries — the ONLY registered entries without a driver CORRECTNESS
-# row (judge-verified green against the local oracle in r14); slot 3
-# is this round's new registration (the blocked-Levenshtein production
-# shape, VERDICT r14 §next 3); then staleness re-checks, oldest
-# `last driver check` first — the 28 remaining r04-certified rows,
-# then the first 18 of the r05 cohort in registry order. Certifying
-# slots 0-2 closes the ledger at 468/468 for the first time.
-# Pre-flight: parity at sf0.001/0.01/0.1 under TZ=America/New_York +
-# hostile partitioning (tests/test_partitioning_robustness.py).
-_ROUND15_WINDOW = [
-    # 0-2: r14 wave-2 report queries, never driver-checked
-    "report_decontaminated_eval_budget", "report_near_dup_cluster_profile",
-    "report_quality_by_split",
-    # 3: round-15 addition (blocked fuzzy-pairs production shape)
-    "string_levenshtein_blocked",
-    # 4-31: the 28 remaining r04-certified rows (oldest, registry order)
-    "pareto_top_parts", "customer_order_gap_stats", "supplier_part_hhi",
-    "events_value_outliers_iqr", "events_user_entropy",
-    "window_funnel_levels", "nation_trade_balance", "text_zipf_slope",
-    "events_burstiness_fano", "brand_revenue_share",
-    "domain_mix_rebalance", "sim_hard_negatives",
-    "multimodal_image_resize", "dedup_containment",
-    "dedup_minhash_estimate", "dedup_cluster_keep_best",
-    "embedding_label_centroids", "json_variant_extract",
-    "string_collation_ci_group", "ansi_try_arithmetic",
-    "doc_quality_rules_gate", "split_stratified_hash",
-    "embedding_centroid_classify", "agg_cube_status_priority",
-    "lateral_topk_suppliers", "events_gap_sessionize",
-    "events_outliers_mad", "bitmap_user_segments",
-    # 32-49: oldest r05-certified rows, registry order
-    "sketch_countmin_words", "sql_group_by_all",
-    "orders_yoy_revenue_growth", "part_price_histogram",
-    "text_keyword_in_context", "events_intergap_buckets",
-    "nation_yearly_rank_change", "ts_ewma_priority_revenue",
-    "corpus_boilerplate_shingles", "dq_expectations_report",
-    "agg_incremental_merge", "ts_seasonal_decompose",
-    "join_fuzzy_blocked", "orders_decile_lift", "bpe_learn_merges",
-    "bpe_encode_apply", "sample_poisson_bootstrap",
-    "multimodal_frame_dedup",
-]
-
-# Round-16 window (VERDICT r15 §next 3): certify the r15 optimization
-# rewrites ON the rewritten code — the r15 window was pinned before the
-# optimization work, so none of the queries whose kernels r15 rewrote
-# (argmax_cell/kmeans_assign, salted pair stage, Σlabel connected
-# components, posting-list checkpoints, PPR loop invariants, nprobe
-# sweep sharing) have a driver CORRECTNESS row on the new code.
-#  - 0: layout_file_compaction_plan — the ONE never-driver-certified
-#    registry entry (registered by the inherited r15 pre-round commit);
-#    certifying it closes the ledger at 470/470.
-#  - 1-14: the r15-rewritten benched paths + their CC/argmax consumers.
-#  - 15-18: the kernels THIS round's optimizations target (bm25/tfidf
-#    corpus-scan reuse, knn _quantized_elements reuse) so they certify
-#    on the r16 code in the same round.
-#  - 19-49: staleness re-checks, oldest driver check first: the 15
-#    remaining r05-certified rows, then the first 16 of the r06 cohort
-#    in registry order.
-# Pre-flight: parity at sf0.001/0.01/0.1 under TZ=America/New_York +
-# hostile partitioning (tests/test_partitioning_robustness.py).
-_ROUND16_WINDOW = [
+_CURRENT_WINDOW = [
     # 0: never driver-certified (ledger closer, 470/470)
     "layout_file_compaction_plan",
     # 1-14: r15 optimization rewrites, certified on the new code
@@ -606,11 +110,6 @@ _ROUND16_WINDOW = [
     "stat_mann_kendall_trend", "stat_poisson_rate_test",
     "events_markov_stationary",
 ]
-
-# Round-agnostic alias — scripts/gen_ledger.py and any other tooling
-# read THIS name so a window rename can never silently zero the ledger
-# (ADVICE r09 item 2).
-_CURRENT_WINDOW = _ROUND16_WINDOW
 
 
 def _reorder() -> None:

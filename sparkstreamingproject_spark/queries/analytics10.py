@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.graph import order_copairs
 from .base import register, table
 
 
@@ -339,16 +340,8 @@ def lpa_partition(spark, sf_dir):
     """(edges, adjacency, final labels) of the bounded LPA pass —
     shared with `graph_modularity_score` (analytics31) so the scored
     partition is this query's partition by construction."""
-    li = (table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_partkey").distinct())
-    a, b = li.alias("a"), li.alias("b")
-    e = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-         .groupBy(F.col("a.l_partkey").alias("u"),
-                  F.col("b.l_partkey").alias("v"))
-         .agg(F.count("*").alias("w"))
-         .filter(F.col("w") >= 2)
-         .select("u", "v"))
+    e = (order_copairs(table(spark, sf_dir, "lineitem"), "l_partkey")
+         .filter(F.col("w") >= 2).select("u", "v"))
     adj = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     lab = adj.select("u").distinct().select("u", F.col("u").alias("lbl"))
     for _ in range(_LPA_ROUNDS):

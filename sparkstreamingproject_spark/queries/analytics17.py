@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.graph import order_copairs
 from .base import register, table
 
 _OOV_SIZES = (100, 500, 1000)
@@ -56,14 +57,8 @@ def graph_clustering_coefficient(spark, sf_dir):
     integers, one terminal divide. Scale: edge generation is bounded
     by order width; everything downstream is keyed joins/aggregates
     on the edge list."""
-    li = (table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_suppkey").distinct())
-    a, b = li.alias("a"), li.alias("b")
-    e = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_suppkey") < F.col("b.l_suppkey")))
-         .select(F.col("a.l_suppkey").alias("u"),
-                 F.col("b.l_suppkey").alias("v"))
-         .distinct().localCheckpoint())
+    e = (order_copairs(table(spark, sf_dir, "lineitem"), "l_suppkey")
+         .select("u", "v").localCheckpoint())
     sym = e.unionAll(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = sym.groupBy("u").agg(F.count("*").cast("long").alias("d"))
     # d*(d-1) is always even -> per-node integer halves; the sum is an

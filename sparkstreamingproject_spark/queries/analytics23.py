@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.graph import order_copairs
 from .base import register, table
 
 _AA_TOP = 20
@@ -64,14 +65,7 @@ def graph_adamic_adar(spark, sf_dir):
     supplier-pair-cardinality graph (a bitmap kernel cannot carry
     per-center weights through AND+popcount); degree-1 centers are
     dropped up front — they can never center a wedge."""
-    li = (table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_suppkey").distinct())
-    a, b = li.alias("a"), li.alias("b")
-    p = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_suppkey") < F.col("b.l_suppkey")))
-         .groupBy(F.col("a.l_suppkey").alias("u"),
-                  F.col("b.l_suppkey").alias("v"))
-         .agg(F.count("*").alias("w")))
+    p = order_copairs(table(spark, sf_dir, "lineitem"), "l_suppkey")
     np_ = p.agg(F.count("*").alias("np"))
     rk = (p.withColumn("rn", F.row_number().over(
               Window.partitionBy(F.lit(1))
@@ -290,14 +284,8 @@ def graph_kcore_peeling(spark, sf_dir):
     `llm/dedup.py:connected_components` does, so the plan stays
     linear in rounds. Edge generation is the triangle-count
     order-key self-join (per-key fanout bounded by order size)."""
-    li = (table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_partkey").distinct())
-    a, b = li.alias("a"), li.alias("b")
-    e = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-         .select(F.col("a.l_partkey").alias("u"),
-                 F.col("b.l_partkey").alias("v"))
-         .distinct())
+    e = order_copairs(table(spark, sf_dir, "lineitem"),
+                      "l_partkey").select("u", "v")
     dirn = (e.select(F.col("u").alias("na"), F.col("v").alias("nb"))
             .unionAll(e.select(F.col("v").alias("na"),
                                F.col("u").alias("nb"))))

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..operators.graph import order_copairs
 from .base import register, table
 
 
@@ -443,16 +444,8 @@ def graph_ppr_seeded(spark, sf_dir):
     vector + one aggregate by destination — the generic billion-edge
     PR shape; ranks/degrees are node-cardinality; rounds are lineage-
     cut with localCheckpoint."""
-    li = (table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_partkey").distinct())
-    e = (li.alias("a").join(
-            li.alias("b"),
-            (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-            & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-         .groupBy(F.col("a.l_partkey").alias("u"),
-                  F.col("b.l_partkey").alias("v"))
-         .agg(F.count("*").alias("w")).filter(F.col("w") >= 2)
-         .select("u", "v"))
+    e = (order_copairs(table(spark, sf_dir, "lineitem"), "l_partkey")
+         .filter(F.col("w") >= 2).select("u", "v"))
     adj = (e.unionByName(e.select(F.col("v").alias("u"),
                                   F.col("u").alias("v")))
            .localCheckpoint())

@@ -15,6 +15,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.graph import order_copairs
 from .analytics28 import _acf_expr_sql
 from .base import register, table
 
@@ -196,14 +197,8 @@ def graph_katz_centrality(spark, sf_dir):
     PageRank/label-prop shuffle), lineage-cut per round via
     localCheckpoint; top-20 is a heap (TakeOrdered), not a global
     sort. Edge generation is the shared order-key self-join."""
-    li = (table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_partkey").distinct())
-    a, b = li.alias("a"), li.alias("b")
-    e = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-         .select(F.col("a.l_partkey").alias("u"),
-                 F.col("b.l_partkey").alias("v"))
-         .distinct())
+    e = order_copairs(table(spark, sf_dir, "lineitem"),
+                      "l_partkey").select("u", "v")
     dirn = (e.select(F.col("u").alias("na"), F.col("v").alias("nb"))
             .unionAll(e.select(F.col("v").alias("na"),
                                F.col("u").alias("nb"))))
@@ -785,14 +780,8 @@ def graph_hyperanf_reachable_pairs(spark, sf_dir):
     cuts lineage per round. At 100 TB this is exactly the HyperANF
     layout: sketches live beside vertices, rounds are map-side-
     combinable max-merges."""
-    li = (table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_partkey").distinct())
-    a, b = li.alias("a"), li.alias("b")
-    e = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-         .select(F.col("a.l_partkey").alias("u"),
-                 F.col("b.l_partkey").alias("v"))
-         .distinct())
+    e = order_copairs(table(spark, sf_dir, "lineitem"),
+                      "l_partkey").select("u", "v")
     dirn = (e.select(F.col("u").alias("na"), F.col("v").alias("nb"))
             .unionAll(e.select(F.col("v").alias("na"),
                                F.col("u").alias("nb"))))

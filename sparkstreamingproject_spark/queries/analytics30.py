@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.graph import order_copairs
 from .base import register, table
 
 _US_DAY = 86_400_000_000
@@ -221,14 +222,8 @@ def graph_degree_powerlaw_fit(spark, sf_dir):
     Scale: the histogram collapses the graph to ≤ max-degree rows
     before any float; the OLS runs over that tiny relation with
     moment sums (the stat_linear_trend kernel)."""
-    li = (table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_partkey").distinct())
-    a, b = li.alias("a"), li.alias("b")
-    e = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-         .select(F.col("a.l_partkey").alias("u"),
-                 F.col("b.l_partkey").alias("v"))
-         .distinct())
+    e = order_copairs(table(spark, sf_dir, "lineitem"),
+                      "l_partkey").select("u", "v")
     deg = (e.select(F.col("u").alias("node"))
            .unionAll(e.select(F.col("v").alias("node")))
            .groupBy("node").agg(F.count("*").cast("long").alias("d")))
@@ -806,14 +801,8 @@ def graph_rich_club_coefficient(spark, sf_dir):
     Scale: the edge relation joins the (node, degree) relation twice
     (key-partitioned), the k-threshold probe is a 4-row broadcast —
     never an all-pairs count."""
-    li = (table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_partkey").distinct())
-    a, b = li.alias("a"), li.alias("b")
-    e = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-         .select(F.col("a.l_partkey").alias("u"),
-                 F.col("b.l_partkey").alias("v"))
-         .distinct())
+    e = order_copairs(table(spark, sf_dir, "lineitem"),
+                      "l_partkey").select("u", "v")
     deg = (e.select(F.col("u").alias("node"))
            .unionAll(e.select(F.col("v").alias("node")))
            .groupBy("node").agg(F.count("*").cast("long").alias("d")))

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.graph import order_copairs
 from .base import register, table
 
 # ------------------------------------------------- Fisher's exact test
@@ -1412,16 +1413,8 @@ def graph_degree_centralization(spark, sf_dir):
     Exact integer degree sums (Σ(dmax−d) = n·dmax − Σd); one terminal
     fixed-arity float, 6dp. Scale: edge build is the shared
     order-keyed aggregate; everything after is |nodes| rows → 1."""
-    li = (table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_partkey").distinct())
-    a, b = li.alias("a"), li.alias("b")
-    e = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-         .groupBy(F.col("a.l_partkey").alias("u"),
-                  F.col("b.l_partkey").alias("v"))
-         .agg(F.count("*").alias("w"))
-         .filter(F.col("w") >= 2)
-         .select("u", "v"))
+    e = (order_copairs(table(spark, sf_dir, "lineitem"), "l_partkey")
+         .filter(F.col("w") >= 2).select("u", "v"))
     adj = e.unionAll(e.select(F.col("v").alias("u"),
                               F.col("u").alias("v")))
     deg = adj.groupBy("u").agg(F.count("*").cast("long").alias("d"))

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.graph import order_copairs
 from .base import register, table
 
 
@@ -252,14 +253,8 @@ def graph_triangle_count(spark, sf_dir):
     (the r04 wedge-join formulation shuffled ~1e8 wedge rows at sf0.1
     and grows with density³). All integers."""
     from ..operators.graph import triangle_count
-    li = (table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_suppkey").distinct())
-    a, b = li.alias("a"), li.alias("b")
-    e = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_suppkey") < F.col("b.l_suppkey")))
-         .select(F.col("a.l_suppkey").alias("u"),
-                 F.col("b.l_suppkey").alias("v"))
-         .distinct())
+    e = order_copairs(table(spark, sf_dir, "lineitem"),
+                      "l_suppkey").select("u", "v")
     # the edge list feeds four actions (degree guard, mask build,
     # closure pass, edge count) — materialize the self-join ONCE
     e = e.localCheckpoint()

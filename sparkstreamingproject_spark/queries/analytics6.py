@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.graph import order_copairs
 from .base import register, table
 
 
@@ -175,14 +176,8 @@ def graph_common_neighbors(spark, sf_dir):
     TakeOrderedAndProject with full tiebreak (common DESC, u, v) —
     deterministic, never a global sort. All integers."""
     from ..operators.graph import common_neighbor_counts
-    li = (table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_suppkey").distinct())
-    a, b = li.alias("a"), li.alias("b")
-    e = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_suppkey") < F.col("b.l_suppkey")))
-         .select(F.col("a.l_suppkey").alias("u"),
-                 F.col("b.l_suppkey").alias("v"))
-         .distinct())
+    e = order_copairs(table(spark, sf_dir, "lineitem"),
+                      "l_suppkey").select("u", "v")
     cn = common_neighbor_counts(e)
     flag = (cn.join(e.withColumn("is_edge", F.lit(1)), ["u", "v"], "left")
             .select("u", "v", "common",

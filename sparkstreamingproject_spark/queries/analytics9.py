@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.graph import order_copairs
 from .base import register, table
 
 _US_7D = 7 * 86_400_000_000
@@ -122,12 +123,9 @@ def basket_association_rules(spark, sf_dir):
              .select("l_orderkey", "p_brand").distinct())
     nb = items.agg(F.countDistinct("l_orderkey").alias("n_baskets"))
     supp = items.groupBy("p_brand").agg(F.count("*").alias("cnt"))
-    a, b = items.alias("a"), items.alias("b")
-    pairs = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                    & (F.col("a.p_brand") < F.col("b.p_brand")))
-             .groupBy(F.col("a.p_brand").alias("lhs"),
-                      F.col("b.p_brand").alias("rhs"))
-             .agg(F.count("*").alias("both_cnt")))
+    pairs = order_copairs(items, "p_brand").select(
+        F.col("u").alias("lhs"), F.col("v").alias("rhs"),
+        F.col("w").alias("both_cnt"))
     sa = supp.select(F.col("p_brand").alias("lhs"),
                      F.col("cnt").alias("lhs_cnt"))
     sb = supp.select(F.col("p_brand").alias("rhs"),
@@ -437,14 +435,8 @@ def graph_kcore_peel(spark, sf_dir):
     hash aggregate over edges plus two semi-joins keyed on the node —
     cost O(|E|) per round with lineage cut by the bounded unroll.
     All integers."""
-    li = (table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_suppkey").distinct())
-    a, b = li.alias("a"), li.alias("b")
-    e = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_suppkey") < F.col("b.l_suppkey")))
-         .select(F.col("a.l_suppkey").alias("u"),
-                 F.col("b.l_suppkey").alias("v"))
-         .distinct())
+    e = order_copairs(table(spark, sf_dir, "lineitem"),
+                      "l_suppkey").select("u", "v")
     adj = e.unionAll(e.select(F.col("v").alias("u"),
                               F.col("u").alias("v")))
     for _ in range(_KCORE_ROUNDS):

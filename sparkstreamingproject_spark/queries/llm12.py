@@ -259,7 +259,13 @@ def _exact_d2_arrays(pairs, ptsq):
     hashed |pairs|·d rows. Here the vectors move as single array rows
     (n rows per leg, |pairs| rows through the fold) and the per-pair
     aggregate disappears into a JVM HOF — the d-factor leaves every
-    exchange and the GROUP BY entirely."""
+    exchange and the GROUP BY entirely.
+
+    Contract: every embedding has the same fixed length (d = 64 in
+    the ``embeddings`` table); the fold pairs position i with position
+    i. A null embedding folds to a null d2, and ``_topk_per_src`` sorts
+    nulls first, so such a pair is dropped here — as the element join
+    drops it, having no elements to join."""
     from ..llm.similarity import _sq_l2_int
     return (pairs
             .join(ptsq.select(F.col("vec_id").alias("src"),
@@ -267,7 +273,8 @@ def _exact_d2_arrays(pairs, ptsq):
             .join(ptsq.select(F.col("vec_id").alias("dst"),
                               F.col("qv").alias("qb")), "dst")
             .select("src", "dst",
-                    _sq_l2_int(F.col("qa"), F.col("qb")).alias("d2")))
+                    _sq_l2_int(F.col("qa"), F.col("qb")).alias("d2"))
+            .filter(F.col("d2").isNotNull()))
 
 
 def _topk_per_src(d2, k=_KNN_K):

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..operators.graph import order_copairs
 from .base import register, table
 
 #: tokens per output shard (sized so every SF yields multiple shards)
@@ -208,14 +209,7 @@ def graph_jaccard_link_prediction(spark, sf_dir):
     over that bounded pair relation, and the wedge join is the same
     Σdeg² bound as triangle counting. Top-20 via
     TakeOrderedAndProject."""
-    li = (table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_suppkey").distinct())
-    a, b = li.alias("a"), li.alias("b")
-    p = (a.join(b, (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-                & (F.col("a.l_suppkey") < F.col("b.l_suppkey")))
-         .groupBy(F.col("a.l_suppkey").alias("u"),
-                  F.col("b.l_suppkey").alias("v"))
-         .agg(F.count("*").alias("w")))
+    p = order_copairs(table(spark, sf_dir, "lineitem"), "l_suppkey")
     np_ = p.agg(F.count("*").alias("np"))
     rk = (p.withColumn("rn", F.row_number().over(
               Window.partitionBy(F.lit(1))

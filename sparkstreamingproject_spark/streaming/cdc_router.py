@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..operators.routing import dim_rows, map_cdc_optype
 from .dim_upsert import latest_per_key
-from .manifest_commit import (cdc_commit, cdc_foreach_batch,
+from .manifest_commit import (_has_parquet, cdc_commit, cdc_foreach_batch,
                               read_cdc_dim)
 
 
@@ -63,13 +63,6 @@ def fact_topic_payload(batch: DataFrame, fact_tables: list[str]) -> DataFrame:
             .select(F.concat(F.upper("table"), F.lit("_"), F.col("op"))
                     .alias("topic"),
                     F.to_json("data").alias("value")))
-
-
-def _has_parquet(path: str) -> bool:
-    for _, _, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
 
 
 def merge_dim_version(one: DataFrame, current: DataFrame | None,

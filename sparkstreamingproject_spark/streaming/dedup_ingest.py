@@ -39,13 +39,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..llm.dedup import band_keys
-
-
-def _has_parquet(path: str) -> bool:
-    for _root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
+from .manifest_commit import _has_parquet
 
 
 def _maybe_read(spark, path: str, schema: str, exclude_batch=None):

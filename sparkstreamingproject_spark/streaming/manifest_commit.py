@@ -85,6 +85,13 @@ import uuid
 from pyspark.sql import DataFrame
 
 
+def _has_parquet(path: str) -> bool:
+    for _root, _dirs, files in os.walk(path):
+        if any(f.endswith(".parquet") for f in files):
+            return True
+    return False
+
+
 def _manifest_path(table_dir: str) -> str:
     return os.path.abspath(table_dir) + ".manifest"
 

@@ -34,6 +34,27 @@ def test_pagerank_empty_edges(spark):
     assert pagerank(edges, n_iter=3).count() == 0
 
 
+def test_order_copairs_hand_built_lineitem(spark):
+    """The co-purchase edge kernel: a line repeated within one order
+    counts once, a one-line order (or one repeating a single part)
+    gives no edge, a pair bought in two orders weighs 2, and a pair
+    listed larger-key-first still comes out as u < v."""
+    from sparkstreamingproject_spark.operators.graph import order_copairs
+    li = spark.createDataFrame(
+        [(1, 1, 30), (1, 2, 10), (1, 3, 20),
+         (1, 4, 10),                 # duplicated (order, part) line
+         (2, 1, 20), (2, 2, 10),     # reversed key order; (10, 20) again
+         (3, 1, 40),                 # one-line order
+         (4, 1, 50), (4, 2, 50),     # one part, two lines
+         (5, 1, 40), (5, 2, 30)],
+        "l_orderkey bigint, l_linenumber int, l_partkey bigint")
+    e = order_copairs(li, "l_partkey")
+    assert e.columns == ["u", "v", "w"]
+    got = sorted(tuple(r) for r in e.collect())
+    assert got == [(10, 20, 2), (10, 30, 1), (20, 30, 1), (30, 40, 1)]
+    assert all(u < v for u, v, _ in got)
+
+
 def _tri(spark, pairs):
     from sparkstreamingproject_spark.operators.graph import triangle_count
     df = spark.createDataFrame(pairs, "u bigint, v bigint")

@@ -46,7 +46,9 @@ def test_df_from_tf_equals_countdistinct_over_words(spark):
 def test_exact_d2_arrays_equals_element_join(spark):
     """r16 kNN rerank: the zip_with array fold must equal the
     element-exploded join+sum — including zero vectors, negative
-    components, d2 ties, and values at the 1e6-quantization edge."""
+    components, d2 ties, values at the 1e6-quantization edge, and a
+    null embedding (the element join drops its pairs; a null d2 would
+    rank first in the per-src top-k)."""
     from sparkstreamingproject_spark.queries.llm12 import (
         _exact_d2, _exact_d2_arrays, _quantized_elements, _quantized_pts)
     emb = spark.createDataFrame(
@@ -54,10 +56,11 @@ def test_exact_d2_arrays_equals_element_join(spark):
          (2, [0.5, -0.25, 0.0, 1.0]),        # identical to 1 (d2=0)
          (3, [-1.0, -1.0, -1.0, -1.0]),
          (4, [0.0, 0.0, 0.0, 0.0]),          # zero vector
-         (5, [0.1234567, 0.7654321, -0.5, 0.5])],  # rounding edge
+         (5, [0.1234567, 0.7654321, -0.5, 0.5]),  # rounding edge
+         (6, None)],                         # null embedding
         "vec_id long, embedding array<double>")
     pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (3, 4), (4, 5), (2, 5), (5, 1)],
+        [(1, 2), (1, 3), (3, 4), (4, 5), (2, 5), (5, 1), (1, 6), (6, 3)],
         "src long, dst long")
     got = _exact_d2_arrays(pairs, _quantized_pts(emb))
     want = _exact_d2(pairs, _quantized_elements(emb))
