@@ -57,12 +57,11 @@ def get_spark(app_name: str = "sparkstreamingproject-spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` — in cluster
-    deployment the master comes from spark-submit and this arg is None.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, else
+    ``local[<cpu count>]``.
     """
-    builder = SparkSession.builder.appName(app_name)
-    if master is None and "SPARK_GRAFT_CPUS" in os.environ or master is None:
-        builder = builder.master(master or f"local[{default_parallelism()}]")
+    builder = (SparkSession.builder.appName(app_name)
+               .master(master or f"local[{default_parallelism()}]"))
     spark = configure(builder, shuffle_partitions).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark

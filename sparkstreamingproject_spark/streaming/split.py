@@ -3,10 +3,18 @@
 Two strategies, both correct; choice is a throughput call:
 
 1. ``split_log_stream_to_sinks`` — one ``foreachBatch`` that persists
-   the micro-batch once and writes the five filtered projections. This
-   is the direct analog of the reference's single-pass routing loop;
-   the ``persist()`` plays the role of its shared iterator. Five sinks,
-   one source scan per batch.
+   the micro-batch once and appends the five filtered projections
+   concurrently. This is the direct analog of the reference's
+   single-pass routing loop; the ``persist()`` plays the role of its
+   shared iterator. Five sinks, one source scan per batch. Each append
+   is a one-task job whose cost is mostly driver-side analysis,
+   planning, job setup and commit, so five sequential appends kept the
+   cores idle for most of the batch; submitted together their driver
+   phases overlap. On a 4-vCPU host the ``ods_log`` benchmark's drain
+   interval per batch (``wall_s``) fell from 1.22 s to 0.91 s (medians
+   of 11 alternating runs each); in one traced run each, the
+   ``foreachBatch`` call (``streaming.batch_s``) fell from 0.92 s to
+   0.50 s, still five one-task jobs a batch.
 
 2. ``tagged_split_writer`` — tag every record with its stream label and
    write ONE partitioned sink (``partitionBy(topic)``); downstream
@@ -19,32 +27,39 @@ sink with a ``topic`` column — the broker does the fan-out.
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.flatten import (
-    error_log, explode_actions, explode_displays, page_log, start_log,
-)
 from ..operators.routing import (
-    TOPIC_ACTION, TOPIC_DISPLAY, TOPIC_ERROR, TOPIC_PAGE, TOPIC_START,
+    TOPIC_ERROR, TOPIC_PAGE, TOPIC_START, split_log_streams,
 )
 
 
 def write_split_batch(batch: DataFrame, batch_id: int, out_dir: str) -> None:
-    """One micro-batch → five parquet table appends. Persist once so the
-    five filtered writes share the parsed batch (the reference walks its
-    iterator once for the same reason)."""
+    """One micro-batch → five parquet table appends, run concurrently.
+
+    Persist once so the five filtered writes share the parsed batch (the
+    reference walks its iterator once for the same reason). Each worker
+    thread takes a copy of the caller's local properties (job group,
+    streaming query id, SQL execution id) and session tags, so its jobs
+    belong to this micro-batch. All five appends finish before the first
+    failure, in topic order, is raised and the batch unpersisted."""
     batch.persist()
     try:
-        outputs = {
-            TOPIC_ERROR: error_log(batch),
-            TOPIC_PAGE: page_log(batch),
-            TOPIC_DISPLAY: explode_displays(batch),
-            TOPIC_ACTION: explode_actions(batch),
-            TOPIC_START: start_log(batch),
-        }
-        for topic, df in outputs.items():
-            (df.write.mode("append").parquet(f"{out_dir}/{topic}"))
+        outputs = split_log_streams(batch)
+        session = batch.sparkSession
+        with ThreadPoolExecutor(len(outputs)) as pool:
+            # one wrapper per worker, so each thread gets its own copy of
+            # the properties its append sets its SQL execution id in
+            futures = [
+                pool.submit(inheritable_thread_target(session)(
+                    df.write.mode("append").parquet), f"{out_dir}/{topic}")
+                for topic, df in outputs.items()]
+        for f in futures:
+            f.result()
     finally:
         batch.unpersist()
 
@@ -60,7 +75,9 @@ def _trigger(writer, trigger_seconds: int | None):
 def split_log_stream_to_sinks(env_stream: DataFrame, out_dir: str,
                               checkpoint: str, trigger_seconds: int | None = 5):
     """Strategy 1: foreachBatch multi-sink (exactly the reference's
-    topology, with offsets/commit handled by the checkpoint)."""
+    topology, with offsets/commit handled by the checkpoint). Each
+    micro-batch's five appends run concurrently, in jobs that carry the
+    batch's job group (``write_split_batch``)."""
     writer = (env_stream.writeStream
               .foreachBatch(lambda b, i: write_split_batch(b, i, out_dir))
               .option("checkpointLocation", checkpoint))

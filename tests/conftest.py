@@ -10,12 +10,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from sparkstreamingproject_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
+SPARK_MASTER = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]"
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("sparkstreamingproject-tests",
-                  master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '8')}]")
+    s = get_spark("sparkstreamingproject-tests", master=SPARK_MASTER)
     yield s
 
 

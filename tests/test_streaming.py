@@ -24,13 +24,14 @@ from sparkstreamingproject_spark.operators.flatten import (
 )
 from sparkstreamingproject_spark.operators.routing import (
     TOPIC_ACTION, TOPIC_DISPLAY, TOPIC_ERROR, TOPIC_PAGE, TOPIC_START,
+    split_log_streams,
 )
 from sparkstreamingproject_spark.schemas import CDC_ENVELOPE_SCHEMA, LOG_ENVELOPE_SCHEMA
 from sparkstreamingproject_spark.sources.streams import file_stream
 from sparkstreamingproject_spark.streaming.cdc_router import route_cdc_stream
 from sparkstreamingproject_spark.streaming.dim_upsert import upsert_dim_parquet
 from sparkstreamingproject_spark.streaming.split import (
-    split_log_stream_to_sinks, tagged_split_writer,
+    split_log_stream_to_sinks, tagged_split_writer, write_split_batch,
 )
 
 from .fixtures import cdc_df, log_envelope_df
@@ -141,6 +142,71 @@ def test_err_records_only_in_error_output(spark):
     for topic in (TOPIC_PAGE, TOPIC_START, TOPIC_DISPLAY, TOPIC_ACTION):
         mids = {r["mid"] for r in outs[topic].select("mid").collect()}
         assert not (mids & err_mids), f"err mids leaked into {topic}"
+
+
+def _count_and_hash(df):
+    """Row count and an order-insensitive content hash (the sum of the
+    rows' xxhash64, so duplicates count with their multiplicity)."""
+    h = F.xxhash64(*df.columns).cast("decimal(38,0)")
+    r = df.agg(F.count(F.lit(1)).alias("n"), F.sum(h).alias("h")).first()
+    return r["n"], r["h"]
+
+
+def test_write_split_batch_writes_each_split_output(spark, tmp_path):
+    """One micro-batch through the concurrent five-way append: each
+    topic's table holds exactly its ``split_log_streams`` frame."""
+    env = log_envelope_df(spark, n=200)
+    out = str(tmp_path / "out")
+    write_split_batch(env, 0, out)
+    for topic, want in split_log_streams(env).items():
+        n, h = _count_and_hash(want)
+        assert n > 0, f"fixture should feed {topic}"
+        got = spark.read.parquet(f"{out}/{topic}")
+        assert _count_and_hash(got) == (n, h), topic
+
+
+def test_write_split_batch_failed_append_waits_for_the_rest(spark, tmp_path):
+    """A failing sink (its target is a regular file) fails the batch,
+    but only after the other four appends have finished, and the
+    persisted batch is released either way."""
+    from pyspark import StorageLevel
+
+    env = log_envelope_df(spark, n=200)
+    out = tmp_path / "out"
+    out.mkdir()
+    (out / TOPIC_PAGE).write_text("not a table")
+    with pytest.raises(Exception, match="not a directory"):
+        write_split_batch(env, 0, str(out))
+    for topic, want in split_log_streams(env).items():
+        if topic == TOPIC_PAGE:
+            continue
+        got = spark.read.parquet(str(out / topic))
+        assert _count_and_hash(got) == _count_and_hash(want), topic
+    assert not env.is_cached
+    assert env.storageLevel == StorageLevel.NONE
+
+
+def test_write_split_batch_jobs_keep_caller_job_group(spark, tmp_path):
+    """The appends run on worker threads; their jobs must still carry
+    the caller's job group (the benchmark's trace joins on it)."""
+    import time
+
+    env = log_envelope_df(spark, n=200)
+    sc = spark.sparkContext
+    group = "write-split-batch-test"
+    sc.setJobGroup(group, "write_split_batch")
+    try:
+        write_split_batch(env, 0, str(tmp_path / "out"))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    # job starts reach the status store through the async listener bus
+    deadline = time.time() + 30
+    while (len(sc.statusTracker().getJobIdsForGroup(group)) < 5
+           and time.time() < deadline):
+        time.sleep(0.1)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 5
 
 
 @pytest.mark.slow
