@@ -126,28 +126,51 @@ def lsh_verified_old(spark, sf_dir):
             .filter(F.col("jaccard") >= 0.8))
 
 
+def _quantized_elements_old(emb):
+    """Pre-r16 rerank relation: (vec_id, pos, x), the n·d explode."""
+    return emb.select(
+        "vec_id",
+        F.posexplode(F.expr(
+            "transform(embedding, v -> "
+            "CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))"
+        )).alias("pos", "x"))
+
+
+def _exact_d2_old(pairs, el):
+    """Pre-r16 exact rerank: two keyed joins of the element relation
+    on (vec_id[, pos]) and a per-pair GROUP BY sum."""
+    return (pairs
+            .join(el.select(F.col("vec_id").alias("src"), "pos",
+                            F.col("x").alias("xa")), "src")
+            .join(el.select(F.col("vec_id").alias("dst"), "pos",
+                            F.col("x").alias("xb")), ["dst", "pos"])
+            .groupBy("src", "dst")
+            .agg(F.sum((F.col("xa") - F.col("xb"))
+                       * (F.col("xa") - F.col("xb"))).alias("d2")))
+
+
 def knn_graph_old(spark, sf_dir):
-    """Pre-r16 seed kNN: element-exploded _exact_d2 (double explode)."""
+    """Pre-r16 seed kNN: element-exploded exact d2 (double explode)."""
     from sparkstreamingproject_spark.llm.similarity import (
         lsh_multi_table_pairs)
     from sparkstreamingproject_spark.queries.llm12 import (
-        _exact_d2, _format_knn, _quantized_elements, _topk_per_src)
+        _format_knn, _topk_per_src)
     emb = table(spark, sf_dir, "embeddings")
     cand = lsh_multi_table_pairs(emb)
     sym = (cand.select(F.col("id_a").alias("src"),
                        F.col("id_b").alias("dst"))
            .unionByName(cand.select(F.col("id_b").alias("src"),
                                     F.col("id_a").alias("dst"))))
-    return _format_knn(_topk_per_src(_exact_d2(sym,
-                                               _quantized_elements(emb))))
+    return _format_knn(_topk_per_src(
+        _exact_d2_old(sym, _quantized_elements_old(emb))))
 
 
 def knn_descent_old(spark, sf_dir):
     from sparkstreamingproject_spark.queries.llm12 import (
-        _exact_d2, _format_knn, _knn_seed_edges, _quantized_elements,
-        _topk_per_src)
+        _format_knn, _knn_seed_edges, _quantized_pts, _topk_per_src)
     emb = table(spark, sf_dir, "embeddings")
-    seed = _knn_seed_edges(emb).select("src", "dst").localCheckpoint()
+    seed = (_knn_seed_edges(emb, _quantized_pts(emb)).select("src", "dst")
+            .localCheckpoint())
     gsym = (seed.select(F.col("src").alias("a"), F.col("dst").alias("b"))
             .unionByName(seed.select(F.col("dst").alias("a"),
                                      F.col("src").alias("b")))
@@ -159,7 +182,7 @@ def knn_descent_old(spark, sf_dir):
     cand2 = (non.unionByName(gsym.select(F.col("a").alias("src"),
                                          F.col("b").alias("dst")))
              .distinct())
-    d2 = _exact_d2(cand2, _quantized_elements(emb))
+    d2 = _exact_d2_old(cand2, _quantized_elements_old(emb))
     return _format_knn(_topk_per_src(d2))
 
 

@@ -33,8 +33,9 @@ consumer re-scans + re-explodes the corpus (3-6 scans in the r15 audit
 plans). On a cluster where mid-query executor loss is routine, swap
 for ``persist(StorageLevel.MEMORY_AND_DISK)`` (lineage kept, spillable)
 at the cost of keeping the lineage-replay plans alive. Never checkpoint
-an UNCAPPED explode (e.g. ``_quantized_elements``' n·d rows) without
-sizing it first — the cure would exceed the disease.
+an UNCAPPED explode (e.g. an n·d element explode of the embeddings; the
+kNN searches checkpoint the n-row ``_quantized_pts`` arrays instead)
+without sizing it first — the cure would exceed the disease.
 """
 
 from __future__ import annotations

@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .similarity import _int_vec
+
 
 def zscore_normalize(df: DataFrame, key_col: str, id_col: str,
                      value_col: str, digits: int = 4) -> DataFrame:
@@ -43,7 +45,8 @@ def zscore_normalize(df: DataFrame, key_col: str, id_col: str,
         norm, out_schema)
 
 
-#: fixed-point quantization scale for exact covariance accumulation
+#: scale of the fixed-point vector format (similarity._int_vec) the
+#: covariance partials accumulate in
 _COV_SCALE = 1_000_000
 
 
@@ -64,22 +67,20 @@ def covariance_matrix(df: DataFrame, emb_col: str = "embedding",
     Determinism under partitioning: float partial sums depend on
     Arrow-batch/partition boundaries (the r03 hash-flake), so the
     elements are quantized to scaled integers ONCE — JVM-side
-    ``round(v * 1e6)`` per element, the same expression a SQL oracle
-    can run — and every partial (Gram cells, column sums, count) is an
-    exact integer accumulated as DECIMAL(38,0). Integer addition is
-    order-free, so the partials are bit-identical for ANY partitioning
-    in any engine; the single float division + round happens once at
-    the end on exact inputs. Per-batch int64 Gram cells are safe far
-    past this scale (|q| <= ~1e6 ⇒ q^2 <= ~1e12; 10k-row Arrow batches
-    ⇒ <= ~1e16 << 2^63); cross-batch growth lives in the DECIMAL sums.
+    ``similarity._int_vec``, ``round(v * 1e6)`` per element, the same
+    expression a SQL oracle can run — and every partial (Gram cells,
+    column sums, count) is an exact integer accumulated as
+    DECIMAL(38,0). Integer addition is order-free, so the partials are
+    bit-identical for ANY partitioning in any engine; the single float
+    division + round happens once at the end on exact inputs. Per-batch
+    int64 Gram cells are safe far past this scale (|q| <= ~1e6 ⇒ q^2 <=
+    ~1e12; 10k-row Arrow batches ⇒ <= ~1e16 << 2^63); cross-batch growth
+    lives in the DECIMAL sums.
     """
     import numpy as np
     import pandas as pd
 
-    q_col = F.expr(
-        f"transform({emb_col}, v -> "
-        f"CAST(round(CAST(v AS DOUBLE) * {_COV_SCALE}, 0) AS BIGINT))"
-    ).alias("q")
+    q_col = _int_vec(emb_col).alias("q")
 
     def gram(batches):
         for pdf in batches:

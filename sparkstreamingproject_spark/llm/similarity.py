@@ -555,6 +555,41 @@ def lsh_multi_table_pairs(df: DataFrame, id_col: str = "vec_id",
             .distinct())
 
 
+# --------------------------------------------- fixed-point vectors
+
+_SQ_L2_CONTRACT = ("_sq_l2_int: vectors must be non-null, hold no null "
+                  "element and have equal length")
+
+
+def _int_vec(emb_col: str):
+    """The engine's one fixed-point vector format: each element
+    quantized once to ``BIGINT(round(x * 1e6))`` — the exact-algebra
+    discipline (see llm/features.py covariance). Every distance, dot
+    product and centroid sum downstream is then an exact integer sum,
+    so no float summation order can flip a code assignment or a
+    ranking between engines or between partitionings. The DuckDB
+    oracles spell the same format as ``CAST(round(v[i] * 1000000) AS
+    BIGINT)``; callers that need (pos, x) rows ``posexplode`` this."""
+    return F.transform(F.col(emb_col).cast("array<double>"),
+                       lambda x: F.round(x * 1e6).cast("long"))
+
+
+def _sq_l2_int(a, b):
+    """The one exact integer squared-L2 between two ``_int_vec``
+    vectors (a JVM zip_with/aggregate fold: no shuffle, no float).
+
+    Contract: both vectors are non-null, hold no null element and
+    have the same length (d = 64 in the ``embeddings`` table). The
+    fold is null exactly when that fails (zip_with pads the shorter
+    side with nulls), and the coalesce turns that null into one
+    ``USER_RAISED_EXCEPTION`` carrying ``_SQ_L2_CONTRACT`` — checked
+    lazily per row, so it starts no job and the result stays
+    ``bigint``."""
+    d = F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+                    F.lit(0).cast("long"), lambda acc, v: acc + v)
+    return F.coalesce(d, F.raise_error(F.lit(_SQ_L2_CONTRACT)))
+
+
 # --------------------------------------------------------------- PQ
 
 PQ_SUBSPACES = 8
@@ -565,18 +600,12 @@ def pq_int_subvectors(df: DataFrame, id_col: str = "vec_id",
                       emb_col: str = "embedding",
                       m_sub: int = PQ_SUBSPACES,
                       dim: int = EMB_DIM) -> DataFrame:
-    """Explode each vector into ``m_sub`` integer-quantized subvectors.
-
-    Elements are quantized once to ``BIGINT(round(x * 1e6))`` — the
-    exact-algebra discipline (see llm/features.py covariance): every
-    distance downstream is an exact integer sum of squared integer
-    diffs, so no float summation-order can flip a code assignment or a
-    ranking between engines or between partitionings. Output:
-    (id, sub, sv array<bigint> of length dim/m_sub).
+    """Explode each vector into ``m_sub`` integer-quantized subvectors
+    (``_int_vec`` elements). Output: (id, sub, sv array<bigint> of
+    length dim/m_sub).
     """
     d_sub = dim // m_sub
-    q = F.transform(F.col(emb_col).cast("array<double>"),
-                    lambda x: F.round(x * 1e6).cast("long"))
+    q = _int_vec(emb_col)
     subs = F.array(*[
         F.struct(F.lit(s).alias("sub"),
                  F.slice(q, s * d_sub + 1, d_sub).alias("sv"))
@@ -585,14 +614,6 @@ def pq_int_subvectors(df: DataFrame, id_col: str = "vec_id",
     return (df.select(F.col(id_col), F.explode(subs).alias("p"))
             .select(id_col, F.col("p.sub").alias("sub"),
                     F.col("p.sv").alias("sv")))
-
-
-def _sq_l2_int(a, b):
-    """Exact integer squared-L2 between two BIGINT vectors (JVM HOFs,
-    fixed arity — no shuffle, no float)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"), lambda acc, v: acc + v)
 
 
 def pq_codebook(df: DataFrame, id_col: str = "vec_id",
@@ -695,9 +716,7 @@ def dbscan_lsh(df: DataFrame, eps2_scaled: int, min_pts: int,
     """
     from .dedup import connected_components
 
-    q = F.transform(F.col(emb_col).cast("array<double>"),
-                    lambda x: F.round(x * 1e6).cast("long"))
-    pts = df.select(F.col(id_col), q.alias("iv"))
+    pts = df.select(F.col(id_col), _int_vec(emb_col).alias("iv"))
     cand = lsh_multi_table_pairs(df, id_col, emb_col)
     a = pts.select(F.col(id_col).alias("id_a"), F.col("iv").alias("va"))
     b = pts.select(F.col(id_col).alias("id_b"), F.col("iv").alias("vb"))
@@ -767,9 +786,7 @@ def ivfadc_index(df: DataFrame, n_cells: int = 8, m_sub: int = PQ_SUBSPACES,
     cell/code id — the whole index is bit-reproducible.
     """
     d_sub = dim // m_sub
-    q = F.transform(F.col(emb_col).cast("array<double>"),
-                    lambda x: F.round(x * 1e6).cast("long"))
-    pts = df.select(F.col(id_col), q.alias("iv"))
+    pts = df.select(F.col(id_col), _int_vec(emb_col).alias("iv"))
     cents = (pts.filter(F.col(id_col) < n_cells)
              .select(F.col(id_col).cast("int").alias("cell"),
                      F.col("iv").alias("cv")))
@@ -815,9 +832,8 @@ def ivfadc_search(queries: DataFrame, cents: DataFrame, cb: DataFrame,
     cells' codes are read (the IVF property). Output: (q_id, id, cell,
     adc_dist, rank)."""
     d_sub = dim // m_sub
-    q6 = F.transform(F.col(emb_col).cast("array<double>"),
-                     lambda x: F.round(x * 1e6).cast("long"))
-    qs = queries.select(F.col(id_col).alias("q_id"), q6.alias("qv"))
+    qs = queries.select(F.col(id_col).alias("q_id"),
+                        _int_vec(emb_col).alias("qv"))
     wp = Window.partitionBy("q_id").orderBy("d", "cell")
     probes = (qs.crossJoin(F.broadcast(cents))
               .select("q_id", "qv", "cell", "cv",
@@ -855,15 +871,6 @@ def ivfadc_search(queries: DataFrame, cents: DataFrame, cb: DataFrame,
 
 RQ_K1 = 16   # level-1 (coarse) centroids
 RQ_K2 = 16   # level-2 (residual) centroids
-
-
-def _int_vec(emb_col: str):
-    """Whole-vector integer quantization: BIGINT(round(x * 1e6)) per
-    element — the same exact-algebra discipline as pq_int_subvectors,
-    without the subspace split (RQ quantizes residuals of the FULL
-    vector, so both levels see all dimensions)."""
-    return F.transform(F.col(emb_col).cast("array<double>"),
-                       lambda x: F.round(x * 1e6).cast("long"))
 
 
 def rq_codebooks(df: DataFrame, id_col: str = "vec_id",

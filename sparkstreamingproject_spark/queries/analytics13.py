@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..llm.similarity import _int_vec
 from .base import register, table
 
 _US_DAY = 86_400_000_000
@@ -210,9 +211,7 @@ def sim_matryoshka_eval(spark, sf_dir):
     |q|·N scoring like `brute_force_topk` — the truncated pass reads
     1/4 of the vector bytes, which is the point being measured."""
     emb = table(spark, sf_dir, "embeddings")
-    q6 = F.transform(F.col("embedding").cast("array<double>"),
-                     lambda x: F.round(x * 1e6).cast("long"))
-    pts = emb.select("vec_id", q6.alias("v"))
+    pts = emb.select("vec_id", _int_vec("embedding").alias("v"))
     qs = (pts.filter(F.col("vec_id") < _MAT_QUERIES)
           .select(F.col("vec_id").alias("q_id"), F.col("v").alias("qv")))
     dot = F.aggregate(

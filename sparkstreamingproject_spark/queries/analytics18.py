@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..llm.similarity import _int_vec
 from .base import register, table
 
 _KEY_TOP = 5
@@ -157,9 +158,7 @@ def embedding_drift_centroid_shift(spark, sf_dir):
            .select("label",
                    F.when(F.col("vec_id") * 2 < F.col("m"), 0)
                    .otherwise(1).alias("half"),
-                   F.posexplode(F.transform(
-                       F.col("embedding").cast("array<double>"),
-                       lambda x: F.round(x * 1e6).cast("long")))
+                   F.posexplode(_int_vec("embedding"))
                    .alias("pos0", "x")))
     el = pts.select("label", "half", (F.col("pos0") + 1).alias("pos"), "x")
     cent = (el.groupBy("label", "half", "pos")

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..llm.similarity import _int_vec
 from ..operators.graph import order_copairs
 from .base import register, table
 
@@ -192,9 +193,7 @@ def embedding_centroid_classify(spark, sf_dir):
     and evaluates the distance as an in-order ``zip_with``/``aggregate``
     HOF per row — one scan, zero per-row shuffle, codegen end-to-end."""
     e = table(spark, sf_dir, "embeddings")
-    qarr = F.expr(
-        "transform(embedding, v -> "
-        "CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))").alias("q")
+    qarr = _int_vec("embedding").alias("q")
     vecs = e.select("vec_id", "label", qarr)
     dims = vecs.select(
         "vec_id", "label", F.posexplode("q").alias("dim", "qv"))

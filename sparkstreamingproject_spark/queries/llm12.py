@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..llm import dedup as D
+from ..llm.similarity import _int_vec, _sq_l2_int, lsh_multi_table_pairs
 from .base import register, table
 from .llm import MINHASH_CTE, _BAND_SELECTS
 
@@ -197,84 +198,42 @@ def embedding_knn_graph(spark, sf_dir):
 
     Scale shape: candidates come from per-bucket posting lists (3
     tables × 2^10 buckets — the recall/bucket-size knob documented in
-    llm/similarity.py:lsh_multi_table_pairs); the exact rerank touches
-    candidate pairs × d rows through two keyed joins; the final top-k
-    is a per-src window over candidate-bounded rows. A node whose
+    llm/similarity.py:lsh_multi_table_pairs); the exact rerank joins
+    the n-row quantized arrays onto both ends of each candidate pair
+    and folds d elements per pair in the JVM; the final top-k is a
+    per-src window over candidate-bounded rows. A node whose
     buckets are all singletons simply emits no edges — at corpus scale
     that is the signal to add tables, not to widen to brute force."""
     emb = table(spark, sf_dir, "embeddings")
-    return _format_knn(_knn_seed_edges(emb))
-
-
-def _quantized_elements(emb):
-    """(vec_id, pos, x): embeddings exploded to once-quantized integer
-    elements — the exact-rerank relation both kNN queries join on."""
-    return emb.select(
-        "vec_id",
-        F.posexplode(F.expr(
-            "transform(embedding, v -> "
-            "CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))"
-        )).alias("pos", "x"))
-
-
-def _exact_d2(pairs, el):
-    """Exact integer squared L2 for each (src, dst) pair via two keyed
-    joins against the element relation — cost |pairs|·d, never N².
-    Used by the greedy-search queries, which checkpoint ``el`` once
-    and probe it across iterations; the one-shot seed/descent passes
-    use ``_exact_d2_arrays`` below instead (r16)."""
-    return (pairs
-            .join(el.select(F.col("vec_id").alias("src"), "pos",
-                            F.col("x").alias("xa")), "src")
-            .join(el.select(F.col("vec_id").alias("dst"),
-                            F.col("pos").alias("pos"),
-                            F.col("x").alias("xb")), ["dst", "pos"])
-            .groupBy("src", "dst")
-            .agg(F.sum((F.col("xa") - F.col("xb"))
-                       * (F.col("xa") - F.col("xb"))).alias("d2")))
+    return _format_knn(_knn_seed_edges(emb, _quantized_pts(emb)))
 
 
 def _quantized_pts(emb):
-    """(vec_id, qv array<bigint>): embeddings once-quantized to
-    integers but kept as ARRAYS — the r16 rerank relation (n rows
-    instead of the element explode's n·d)."""
-    return emb.select(
-        "vec_id",
-        F.expr("transform(embedding, v -> "
-               "CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))"
-               ).alias("qv"))
+    """(vec_id, qv array<bigint>): embeddings in the ``_int_vec``
+    fixed-point format, one array row per vector — the relation every
+    exact rerank of the kNN family joins on."""
+    return emb.select("vec_id", _int_vec("embedding").alias("qv"))
 
 
 def _exact_d2_arrays(pairs, ptsq):
     """Exact integer squared L2 per (src, dst) pair via two id-keyed
-    joins of the n-row quantized-ARRAY relation + one zip_with fold
-    (the ``dbscan_lsh`` idiom; exact same integer sum as the
-    element-join formulation — a fold over d longs, order-fixed,
-    no float).
+    joins of the n-row quantized-ARRAY relation + one ``_sq_l2_int``
+    fold: the vectors move as single array rows (n rows per leg,
+    |pairs| rows through the fold), so the d-factor never enters an
+    exchange or a GROUP BY. The oracles compute the same integer sum
+    as an element join on (vec_id, pos).
 
-    r16 (guide §2.3/§2.4; VERDICT r15 §next 7): ``_exact_d2`` joined
-    the n·d element explode on BOTH legs — the explode subtree ran
-    twice (the two legs prune/alias differently, so no reuse), the
-    (dst, pos) leg exchanged n·d rows, and the intersect aggregate
-    hashed |pairs|·d rows. Here the vectors move as single array rows
-    (n rows per leg, |pairs| rows through the fold) and the per-pair
-    aggregate disappears into a JVM HOF — the d-factor leaves every
-    exchange and the GROUP BY entirely.
-
-    Contract: every embedding has the same fixed length (d = 64 in
-    the ``embeddings`` table); the fold pairs position i with position
-    i. A null embedding folds to a null d2, and ``_topk_per_src`` sorts
-    nulls first, so such a pair is dropped here — as the element join
-    drops it, having no elements to join."""
-    from ..llm.similarity import _sq_l2_int
+    Contract (``_sq_l2_int``'s): every embedding is non-null, holds no
+    null element and has the same fixed length (d = 64 in the
+    ``embeddings`` table); a pair that breaks it raises
+    ``USER_RAISED_EXCEPTION`` when the pair is computed."""
     return (pairs
             .join(ptsq.select(F.col("vec_id").alias("src"),
                               F.col("qv").alias("qa")), "src")
             .join(ptsq.select(F.col("vec_id").alias("dst"),
                               F.col("qv").alias("qb")), "dst")
             .select("src", "dst",
-                    _sq_l2_int(F.col("qa"), F.col("qb")).alias("d2"))
-            .filter(F.col("d2").isNotNull()))
+                    _sq_l2_int(F.col("qa"), F.col("qb")).alias("d2")))
 
 
 def _topk_per_src(d2, k=_KNN_K):
@@ -284,16 +243,31 @@ def _topk_per_src(d2, k=_KNN_K):
             .filter(F.col("rank") <= k))
 
 
-def _knn_seed_edges(emb):
-    """Ranked seed kNN edges (src, dst, d2, rank≤k) from OR-amplified
-    LSH candidates + exact integer rerank."""
-    from ..llm.similarity import lsh_multi_table_pairs
+def _lsh_candidate_d2(emb, ptsq):
+    """(src, dst, d2): OR-amplified LSH candidate pairs in both
+    directions, each with its exact integer squared L2."""
     cand = lsh_multi_table_pairs(emb)
     sym = (cand.select(F.col("id_a").alias("src"),
                        F.col("id_b").alias("dst"))
            .unionByName(cand.select(F.col("id_b").alias("src"),
                                     F.col("id_a").alias("dst"))))
-    return _topk_per_src(_exact_d2_arrays(sym, _quantized_pts(emb)))
+    return _exact_d2_arrays(sym, ptsq)
+
+
+def _knn_seed_edges(emb, ptsq):
+    """Ranked seed kNN edges (src, dst, d2, rank≤k) from OR-amplified
+    LSH candidates + exact integer rerank over ``ptsq``
+    (``_quantized_pts(emb)``)."""
+    return _topk_per_src(_lsh_candidate_d2(emb, ptsq))
+
+
+def _undirected(edges):
+    """(a, b): the directed (src, dst) edges in both directions,
+    deduplicated — the undirected neighbour relation of a kNN graph."""
+    return (edges.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+            .unionByName(edges.select(F.col("dst").alias("a"),
+                                      F.col("src").alias("b")))
+            .distinct())
 
 
 def _format_knn(ranked):
@@ -321,20 +295,18 @@ def embedding_knn_descent_round(spark, sf_dir):
     Scale shape: the seed graph has ≤ k·N edges, so the symmetrized
     relation is ≤ 2kN and the 2-hop self-join emits ≤ (2k)²·N
     directed candidates — linear in N with a k² constant, never N²;
-    the re-score touches candidates×d through the same two keyed
-    joins as the seed pass, and the final top-k is a per-src window
-    over a k²-bounded group. Each extra descent round is the same
+    the re-score joins the n-row quantized arrays on both ends of each
+    candidate, as the seed pass does, and the final top-k is a per-src
+    window over a k²-bounded group. Each extra descent round is the same
     bounded shape (converged graphs stop producing new candidates)."""
     emb = table(spark, sf_dir, "embeddings")
-    seed = _knn_seed_edges(emb).select("src", "dst")
+    ptsq = _quantized_pts(emb)
+    seed = _knn_seed_edges(emb, ptsq).select("src", "dst")
     # localCheckpoint: the seed edges feed BOTH sides of the 2-hop
     # self-join and the candidate union — cut the LSH+rerank lineage
     # so it computes once, exactly like the iterative graph kernels
     seed = seed.localCheckpoint()
-    gsym = (seed.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-            .unionByName(seed.select(F.col("dst").alias("a"),
-                                     F.col("src").alias("b")))
-            .distinct())
+    gsym = _undirected(seed)
     non = (gsym.alias("p")
            .join(gsym.alias("q"), F.col("p.b") == F.col("q.a"))
            .filter(F.col("p.a") != F.col("q.b"))
@@ -342,7 +314,7 @@ def embedding_knn_descent_round(spark, sf_dir):
     cand2 = (non.unionByName(gsym.select(F.col("a").alias("src"),
                                          F.col("b").alias("dst")))
              .distinct())
-    d2 = _exact_d2_arrays(cand2, _quantized_pts(emb))
+    d2 = _exact_d2_arrays(cand2, ptsq)
     return _format_knn(_topk_per_src(d2))
 
 
@@ -739,19 +711,13 @@ def sim_hybrid_rrf_fusion(spark, sf_dir):
     from pyspark.sql import Window
     emb = table(spark, sf_dir, "embeddings")
     docs = table(spark, sf_dir, "documents")
-    el = emb.select(
-        "vec_id",
-        F.posexplode(F.expr(
-            "transform(embedding, v -> "
-            "CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))"
-        )).alias("pos", "x"))
-    qv = (el.filter(F.col("vec_id") == _RRF_QDOC)
-          .select("pos", F.col("x").alias("qx")))
-    sem = (el.filter(F.col("vec_id") != _RRF_QDOC)
-           .join(F.broadcast(qv), "pos")
-           .groupBy(F.col("vec_id").alias("doc_id"))
-           .agg(F.sum((F.col("x") - F.col("qx"))
-                      * (F.col("x") - F.col("qx"))).alias("d2")))
+    pts = _quantized_pts(emb)
+    qv = (pts.filter(F.col("vec_id") == _RRF_QDOC)
+          .select(F.col("qv").alias("q")))
+    sem = (pts.filter(F.col("vec_id") != _RRF_QDOC)
+           .crossJoin(F.broadcast(qv))
+           .select(F.col("vec_id").alias("doc_id"),
+                   _sq_l2_int(F.col("qv"), F.col("q")).alias("d2")))
     sem_rank = (sem.withColumn(
         "sem_rank", F.row_number().over(Window.orderBy("d2", "doc_id")))
         .filter(F.col("sem_rank") <= _RRF_TOP)
@@ -1036,12 +1002,8 @@ def embedding_outlier_mahalanobis_diag(spark, sf_dir):
     cardinality output) + one scoring pass with the 64-row stats
     broadcast."""
     emb = table(spark, sf_dir, "embeddings")
-    el = emb.select(
-        "vec_id",
-        F.posexplode(F.expr(
-            "transform(embedding, v -> "
-            "CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))"
-        )).alias("pos", "q"))
+    el = emb.select("vec_id",
+                    F.posexplode(_int_vec("embedding")).alias("pos", "q"))
     dec = "decimal(38,0)"
     m = (el.groupBy("pos")
          .agg(F.sum(F.col("q").cast(dec)).cast(dec).alias("s"),
@@ -1137,32 +1099,21 @@ def curation_mmr_diverse_select(spark, sf_dir):
     driver-side loop structure but never driver-side DATA."""
     from pyspark.sql import Window
     emb = table(spark, sf_dir, "embeddings")
-    el = emb.select(
-        "vec_id",
-        F.posexplode(F.expr(
-            "transform(embedding, v -> "
-            "CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))"
-        )).alias("pos", "x"))
-    qv = (el.filter(F.col("vec_id") == _MMR_QDOC)
-          .select("pos", F.col("x").alias("qx")))
-    d2q = (el.filter(F.col("vec_id") != _MMR_QDOC)
-           .join(F.broadcast(qv), "pos")
-           .groupBy("vec_id")
-           .agg(F.sum((F.col("x") - F.col("qx"))
-                      * (F.col("x") - F.col("qx"))).cast("long")
-                .alias("d2q")))
+    pts = _quantized_pts(emb)
+    qv = (pts.filter(F.col("vec_id") == _MMR_QDOC)
+          .select(F.col("qv").alias("q")))
+    d2q = (pts.filter(F.col("vec_id") != _MMR_QDOC)
+           .crossJoin(F.broadcast(qv))
+           .select("vec_id",
+                   _sq_l2_int(F.col("qv"), F.col("q")).alias("d2q")))
     cand = (d2q.orderBy("d2q", "vec_id").limit(_MMR_CANDS)
             .localCheckpoint())
-    cel = el.join(cand.select("vec_id"), "vec_id", "left_semi")
-    pairs = (cel.alias("a").join(
-        cel.alias("b"),
-        (F.col("a.pos") == F.col("b.pos"))
-        & (F.col("a.vec_id") != F.col("b.vec_id")))
-        .groupBy(F.col("a.vec_id").alias("a"),
-                 F.col("b.vec_id").alias("b"))
-        .agg(F.sum((F.col("a.x") - F.col("b.x"))
-                   * (F.col("a.x") - F.col("b.x"))).cast("long")
-             .alias("d2")).localCheckpoint())
+    cpts = pts.join(cand.select("vec_id"), "vec_id", "left_semi")
+    pairs = (cpts.alias("a").join(
+        cpts.alias("b"), F.col("a.vec_id") != F.col("b.vec_id"))
+        .select(F.col("a.vec_id").alias("a"), F.col("b.vec_id").alias("b"),
+                _sq_l2_int(F.col("a.qv"), F.col("b.qv")).alias("d2"))
+        .localCheckpoint())
     sel = (cand.orderBy("d2q", "vec_id").limit(1)
            .select("vec_id", F.lit(1).alias("step")))
     for t in range(2, _MMR_K + 1):
@@ -1257,51 +1208,62 @@ def sim_knn_graph_greedy_search(spark, sf_dir):
 
     Scale shape: per hop, candidates = the current vertices' ≤2k
     graph neighbors per query — |Q|·2k rows, never corpus-sized; the
-    distance rerank joins the element relation on the candidate set
-    only. At index scale this is the navigable-small-world query
-    loop: O(hops·degree) distance evaluations per query, with the
-    entry fixed (HNSW's upper layers replace the fixed entry with a
-    coarse-to-fine one; the hop loop is unchanged)."""
+    distance rerank joins the n-row quantized arrays (checkpointed
+    once, probed by every hop) onto the candidate pairs only and folds
+    each pair with ``_sq_l2_int``. At index scale this is the
+    navigable-small-world query loop: O(hops·degree) distance
+    evaluations per query, with the entry fixed (HNSW's upper layers
+    replace the fixed entry with a coarse-to-fine one; the hop loop is
+    unchanged)."""
     emb = table(spark, sf_dir, "embeddings")
-    el = _quantized_elements(emb).localCheckpoint()
-    seed = _knn_seed_edges(emb).select("src", "dst").localCheckpoint()
-    gsym = (seed.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-            .unionByName(seed.select(F.col("dst").alias("a"),
-                                     F.col("src").alias("b")))
-            .distinct()
-            .localCheckpoint())
-    qs = emb.filter(F.col("vec_id") < _GS_NQ) \
-        .select(F.col("vec_id").alias("qid"))
-    ent = (qs.join(gsym, gsym["a"] != qs["qid"])
-           .groupBy("qid").agg(F.min("a").alias("node")))
+    ptsq = _quantized_pts(emb).localCheckpoint()
+    seed = _knn_seed_edges(emb, ptsq).select("src", "dst").localCheckpoint()
+    gsym = _undirected(seed).localCheckpoint()
+    return _greedy_search(emb, ptsq, [(gsym, _GS_HOPS)])
+
+
+def _greedy_search(emb, ptsq, layers):
+    """Greedy best-first walk for the queries vec_id < _GS_NQ over
+    ``layers`` — a list of (graph (a, b), hops), coarse first. The
+    entry vertex is the smallest non-self node of the first graph;
+    each hop moves a query to its current vertex's neighbour closest
+    to it iff STRICTLY closer (ties to the lowest node id), with every
+    distance the exact ``_exact_d2_arrays`` over ``ptsq`` (checkpoint
+    it: every hop probes it). Returns (query_id, found_id, dist_sq)."""
+    from pyspark.sql import Window
 
     def dist(pairs):
-        # exact integer L2 between (qid, node) via the element relation
-        d = _exact_d2(pairs.select(F.col("qid").alias("src"),
-                                   F.col("node").alias("dst")), el)
+        d = _exact_d2_arrays(pairs.select(F.col("qid").alias("src"),
+                                          F.col("node").alias("dst")),
+                             ptsq)
         return d.select(F.col("src").alias("qid"),
                         F.col("dst").alias("node"), "d2")
 
+    qs = emb.filter(F.col("vec_id") < _GS_NQ) \
+        .select(F.col("vec_id").alias("qid"))
+    g_entry = layers[0][0]
+    ent = (qs.join(g_entry, g_entry["a"] != qs["qid"])
+           .groupBy("qid").agg(F.min("a").alias("node")))
     cur = dist(ent).localCheckpoint()
-    from pyspark.sql import Window
-    for _ in range(_GS_HOPS):
-        cand = (cur.join(gsym, cur["node"] == gsym["a"])
-                .filter(F.col("b") != F.col("qid"))
-                .select("qid", F.col("b").alias("node")).distinct())
-        cd = dist(cand)
-        wq = Window.partitionBy("qid").orderBy("d2", "node")
-        best = (cd.withColumn("rn", F.row_number().over(wq))
-                .filter(F.col("rn") == 1)
-                .select("qid", F.col("node").alias("b_node"),
-                        F.col("d2").alias("b_d2")))
-        better = F.col("b_d2").isNotNull() & (F.col("b_d2") < F.col("d2"))
-        cur = (cur.join(best, "qid", "left")
-               .select("qid",
-                       F.when(better, F.col("b_node"))
-                       .otherwise(F.col("node")).alias("node"),
-                       F.when(better, F.col("b_d2"))
-                       .otherwise(F.col("d2")).alias("d2"))
-               .localCheckpoint())
+    wq = Window.partitionBy("qid").orderBy("d2", "node")
+    for gsym, n_hops in layers:
+        for _ in range(n_hops):
+            cand = (cur.join(gsym, cur["node"] == gsym["a"])
+                    .filter(F.col("b") != F.col("qid"))
+                    .select("qid", F.col("b").alias("node")).distinct())
+            best = (dist(cand).withColumn("rn", F.row_number().over(wq))
+                    .filter(F.col("rn") == 1)
+                    .select("qid", F.col("node").alias("b_node"),
+                            F.col("d2").alias("b_d2")))
+            better = (F.col("b_d2").isNotNull()
+                      & (F.col("b_d2") < F.col("d2")))
+            cur = (cur.join(best, "qid", "left")
+                   .select("qid",
+                           F.when(better, F.col("b_node"))
+                           .otherwise(F.col("node")).alias("node"),
+                           F.when(better, F.col("b_d2"))
+                           .otherwise(F.col("d2")).alias("d2"))
+                   .localCheckpoint())
     return cur.select(
         F.col("qid").alias("query_id"),
         F.col("node").alias("found_id"),
@@ -1398,79 +1360,25 @@ def sim_ann_two_layer_search(spark, sf_dir):
     global entry (`sim_knn_graph_greedy_search` is the flat
     baseline).
 
-    Both layers re-rank with the SAME exact integer squared-L2 and
-    (d2, node) tiebreaks; monotone downhill moves only — identical
-    walks in both engines. The layer-1 kNN graph costs nothing
-    extra: it re-ranks the ALREADY-COMPUTED LSH candidate distances
-    restricted to layer-1 pairs.
+    Both layers walk the flat search's hop loop (``_greedy_search``):
+    the SAME exact integer squared-L2 over the n-row quantized arrays
+    (checkpointed once) and (d2, node) tiebreaks; monotone downhill
+    moves only — identical walks in both engines. The layer-1 kNN
+    graph costs nothing extra: it re-ranks the ALREADY-COMPUTED LSH
+    candidate distances restricted to layer-1 pairs.
 
     Scale: per hop |Q|·degree distance evaluations (the NSW loop);
     layer-1 has ~1/{_HN_MOD} the nodes so its graph build is a
     filter + window over the shared candidate distances, no second
     LSH pass."""
     emb = table(spark, sf_dir, "embeddings")
-    el = _quantized_elements(emb).localCheckpoint()
-    from ..llm.similarity import lsh_multi_table_pairs
-    cand = lsh_multi_table_pairs(emb)
-    sym = (cand.select(F.col("id_a").alias("src"),
-                       F.col("id_b").alias("dst"))
-           .unionByName(cand.select(F.col("id_b").alias("src"),
-                                    F.col("id_a").alias("dst"))))
-    d2 = _exact_d2(sym, el).localCheckpoint()
+    ptsq = _quantized_pts(emb).localCheckpoint()
+    d2 = _lsh_candidate_d2(emb, ptsq).localCheckpoint()
     knn0 = _topk_per_src(d2).select("src", "dst")
     knn1 = _topk_per_src(
         d2.filter((F.col("src") % _HN_MOD == 0)
                   & (F.col("dst") % _HN_MOD == 0))).select("src", "dst")
-
-    def symg(edges):
-        return (edges.select(F.col("src").alias("a"),
-                             F.col("dst").alias("b"))
-                .unionByName(edges.select(F.col("dst").alias("a"),
-                                          F.col("src").alias("b")))
-                .distinct().localCheckpoint())
-
-    g0, g1 = symg(knn0), symg(knn1)
-    qs = emb.filter(F.col("vec_id") < _GS_NQ) \
-        .select(F.col("vec_id").alias("qid"))
-    ent = (qs.join(g1, g1["a"] != qs["qid"])
-           .groupBy("qid").agg(F.min("a").alias("node")))
-
-    def dist(pairs):
-        d = _exact_d2(pairs.select(F.col("qid").alias("src"),
-                                   F.col("node").alias("dst")), el)
-        return d.select(F.col("src").alias("qid"),
-                        F.col("dst").alias("node"), "d2")
-
-    from pyspark.sql import Window
-
-    def hops(cur, gsym, n):
-        for _ in range(n):
-            cand_h = (cur.join(gsym, cur["node"] == gsym["a"])
-                      .filter(F.col("b") != F.col("qid"))
-                      .select("qid", F.col("b").alias("node"))
-                      .distinct())
-            cd = dist(cand_h)
-            wq = Window.partitionBy("qid").orderBy("d2", "node")
-            best = (cd.withColumn("rn", F.row_number().over(wq))
-                    .filter(F.col("rn") == 1)
-                    .select("qid", F.col("node").alias("b_node"),
-                            F.col("d2").alias("b_d2")))
-            better = (F.col("b_d2").isNotNull()
-                      & (F.col("b_d2") < F.col("d2")))
-            cur = (cur.join(best, "qid", "left")
-                   .select("qid",
-                           F.when(better, F.col("b_node"))
-                           .otherwise(F.col("node")).alias("node"),
-                           F.when(better, F.col("b_d2"))
-                           .otherwise(F.col("d2")).alias("d2"))
-                   .localCheckpoint())
-        return cur
-
-    cur = dist(ent).localCheckpoint()
-    cur = hops(cur, g1, _HN_HOPS)   # coarse layer crosses the space
-    cur = hops(cur, g0, _HN_HOPS)   # full layer refines locally
-    return cur.select(
-        F.col("qid").alias("query_id"),
-        F.col("node").alias("found_id"),
-        F.round(F.col("d2").cast("double") / F.lit(1e12), 6)
-        .alias("dist_sq"))
+    g0 = _undirected(knn0).localCheckpoint()
+    g1 = _undirected(knn1).localCheckpoint()
+    # coarse layer crosses the space, full layer refines locally
+    return _greedy_search(emb, ptsq, [(g1, _HN_HOPS), (g0, _HN_HOPS)])

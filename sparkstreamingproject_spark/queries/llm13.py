@@ -14,7 +14,9 @@ import math
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from ..llm.similarity import _sq_l2_int
 from .base import register, table
+from .llm12 import _quantized_pts
 
 # ------------------------------------------------ content-defined chunking
 
@@ -889,30 +891,20 @@ def sample_kcenter_greedy(spark, sf_dir):
     (seed k-means++, pick annotation batches, cap per-cluster
     sampling)."""
     emb = table(spark, sf_dir, "embeddings")
-    el = _el_quantized(emb).localCheckpoint()
-    ids = emb.select("vec_id")
+    pts = _quantized_pts(emb).localCheckpoint()
     chosen = (emb.agg(F.min("vec_id").alias("vec_id"))
               .localCheckpoint())
     sels = None
     for k in range(1, _KC_PICKS + 1):
         # distance of every point to every chosen center (centers
         # broadcast), min per point, excluding already-chosen
-        pairs = (el.alias("p")
-                 .join(F.broadcast(
-                     el.join(chosen, "vec_id")
-                     .select(F.col("vec_id").alias("q"),
-                             F.col("pos").alias("pos"),
-                             F.col("x").alias("xq"))).alias("c"),
-                     "pos")
-                 .filter(F.col("p.vec_id") != F.col("c.q"))
-                 .groupBy(F.col("p.vec_id").alias("vec_id"),
-                          F.col("c.q").alias("q"))
-                 .agg(F.sum((F.col("p.x") - F.col("xq"))
-                            * (F.col("p.x") - F.col("xq")))
-                      .alias("d2")))
-        md = (pairs.join(chosen.withColumnRenamed("vec_id", "ch"),
-                         pairs["q"] == F.col("ch"), "left_semi")
-              .groupBy("vec_id").agg(F.min("d2").alias("min_d2"))
+        centers = pts.join(chosen, "vec_id").select(
+            F.col("vec_id").alias("q"), F.col("qv").alias("cv"))
+        pairs = (pts.crossJoin(F.broadcast(centers))
+                 .filter(F.col("vec_id") != F.col("q"))
+                 .select("vec_id",
+                         _sq_l2_int(F.col("qv"), F.col("cv")).alias("d2")))
+        md = (pairs.groupBy("vec_id").agg(F.min("d2").alias("min_d2"))
               .join(chosen, "vec_id", "left_anti"))
         pick = (md.orderBy(F.desc("min_d2"), "vec_id").limit(1)
                 .localCheckpoint())
@@ -926,14 +918,3 @@ def sample_kcenter_greedy(spark, sf_dir):
                   .localCheckpoint())
     return sels
 
-
-def _el_quantized(emb):
-    """(vec_id, pos, x): once-quantized integer elements — the same
-    relation the kNN family reranks on (llm12._quantized_elements;
-    local copy keeps llm13 import-independent of llm12)."""
-    return emb.select(
-        "vec_id",
-        F.posexplode(F.expr(
-            "transform(embedding, v -> "
-            "CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))"
-        )).alias("pos", "x"))

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..llm import dedup as D
 from .base import register, table
+from .llm2 import _lloyd_chain
 
 # SemDeDup parameters: 8 Lloyd-refined cells (2 iterations, the same
 # deterministic first-k init as sim_ivf_kmeans_cells) and the corpus's
@@ -31,40 +32,6 @@ from .base import register, table
 SEM_K = 8
 SEM_ITER = 2
 SEM_THRESHOLD = 0.3
-
-
-def _lloyd_chain(n_iter: int) -> tuple[str, str]:
-    """(CTE chain SQL, final-centroid CTE name) for the unrolled Lloyd
-    iterations — k-agnostic (k only enters via the c0 init), shared by
-    every semantic-cells oracle."""
-    def assign(cn: str, an: str) -> str:
-        return f"""
-    {an} AS (
-      SELECT vec_id, v, cell FROM (
-        SELECT p.vec_id, p.v, c.cell,
-               row_number() OVER (
-                 PARTITION BY p.vec_id
-                 ORDER BY round(list_cosine_similarity(p.v, c.cv), 6) DESC,
-                          c.cell) AS rn
-        FROM pts p CROSS JOIN {cn} c) WHERE rn = 1)"""
-
-    def means(an: str, cn: str) -> str:
-        return f"""
-    {cn} AS (
-      SELECT cell, list(round(m, 6) ORDER BY pos) AS cv FROM (
-        SELECT cell, pos, avg(val) AS m FROM (
-          SELECT cell, unnest(v) AS val, generate_subscripts(v, 1) AS pos
-          FROM {an})
-        GROUP BY cell, pos)
-      GROUP BY cell)"""
-
-    steps = []
-    prev = "c0"
-    for i in range(1, n_iter + 1):
-        steps.append(assign(prev, f"a{i}"))
-        steps.append(means(f"a{i}", f"c{i}"))
-        prev = f"c{i}"
-    return ",".join(steps), prev
 
 
 def _semantic_cells_oracle(k: int = SEM_K, n_iter: int = SEM_ITER,

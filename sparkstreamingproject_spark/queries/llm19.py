@@ -24,8 +24,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from .base import register, table
-from .llm15 import (SEM_ITER, SEM_K, SEM_TARGET, SEM_THRESHOLD,
-                    _lloyd_chain)
+from .llm2 import _lloyd_chain
+from .llm15 import SEM_ITER, SEM_K, SEM_TARGET, SEM_THRESHOLD
 
 # ------------------------------------- multi-probe boundary recovery
 

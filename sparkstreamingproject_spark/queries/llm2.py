@@ -193,10 +193,10 @@ def dedup_incremental(spark, sf_dir):
     return kept.select("doc_id", "n_chars")
 
 
-def _kmeans_oracle(k: int = 8, n_iter: int = 2) -> str:
-    """Lloyd's iterations unrolled as CTE pairs (assign a{i} / means
-    c{i}) — same 6dp centroid rounding and 6dp-sim/cell-id tie-break as
-    the Spark side, so assignment is engine-independent."""
+def _lloyd_chain(n_iter: int) -> tuple[str, str]:
+    """(CTE chain SQL, final-centroid CTE name) for the unrolled Lloyd
+    iterations — k-agnostic (k only enters via the c0 init), shared by
+    the IVF k-means oracle below and every semantic-cells oracle."""
     def assign(cn: str, an: str) -> str:
         return f"""
     {an} AS (
@@ -224,7 +224,14 @@ def _kmeans_oracle(k: int = 8, n_iter: int = 2) -> str:
         steps.append(assign(prev, f"a{i}"))
         steps.append(means(f"a{i}", f"c{i}"))
         prev = f"c{i}"
-    chain = ",".join(steps)
+    return ",".join(steps), prev
+
+
+def _kmeans_oracle(k: int = 8, n_iter: int = 2) -> str:
+    """Lloyd's iterations unrolled as CTE pairs (``_lloyd_chain``) —
+    same 6dp centroid rounding and 6dp-sim/cell-id tie-break as the
+    Spark side, so assignment is engine-independent."""
+    chain, prev = _lloyd_chain(n_iter)
     return f"""
     WITH pts AS (
       SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from ..llm.similarity import _int_vec
 from .base import register, table
 
 _M_SUB = 8       # subspaces (d=64 -> 8 dims each)
@@ -469,12 +470,8 @@ def embedding_pca_project(spark, sf_dir):
           .select("i", (F.col("p") * F.col("s")).alias("p")))
     # quantize embeddings exactly as covariance_matrix does, explode to
     # (vec_id, dim, q), and dot with the broadcast eigenvector
-    q = (emb.select(
-            "vec_id",
-            F.posexplode(F.expr(
-                "transform(embedding, v -> "
-                "CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))"
-            )).alias("i", "q")))
+    q = emb.select("vec_id",
+                   F.posexplode(_int_vec("embedding")).alias("i", "q"))
     pq = (q.join(F.broadcast(vc), "i")
           .groupBy("vec_id")
           .agg(F.sum(F.col("q").cast("decimal(38,0)")
@@ -636,12 +633,9 @@ def embedding_pca_top2_project(spark, sf_dir):
         w = rescale(o, "w").localCheckpoint()
     wc = _canonicalize_sign(w)
 
-    q = (emb.select(
-            "vec_id",
-            F.posexplode(F.expr(
-                "transform(embedding, v -> "
-                "CAST(round(CAST(v AS DOUBLE) * 1000000, 0) AS BIGINT))"
-            )).alias("i", "q"))).localCheckpoint()
+    q = emb.select("vec_id",
+                   F.posexplode(_int_vec("embedding")).alias("i", "q")) \
+        .localCheckpoint()
 
     def project(vec, out):
         return (q.join(F.broadcast(vec), "i")

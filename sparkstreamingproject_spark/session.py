@@ -57,11 +57,17 @@ def get_spark(app_name: str = "sparkstreamingproject-spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) the engine SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, else
+    An explicit ``master`` wins. Otherwise a script run by
+    ``spark-submit`` (which sets ``PYSPARK_GATEWAY_PORT`` before Python
+    starts) keeps the ``--master`` it was submitted with, and a plain
+    ``python`` process runs on ``local[$SPARK_GRAFT_CPUS]``, else
     ``local[<cpu count>]``.
     """
-    builder = (SparkSession.builder.appName(app_name)
-               .master(master or f"local[{default_parallelism()}]"))
+    builder = SparkSession.builder.appName(app_name)
+    if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        master = f"local[{default_parallelism()}]"
+    if master is not None:
+        builder = builder.master(master)
     spark = configure(builder, shuffle_partitions).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     return spark

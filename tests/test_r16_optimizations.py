@@ -44,29 +44,33 @@ def test_df_from_tf_equals_countdistinct_over_words(spark):
 
 
 def test_exact_d2_arrays_equals_element_join(spark):
-    """r16 kNN rerank: the zip_with array fold must equal the
-    element-exploded join+sum — including zero vectors, negative
-    components, d2 ties, values at the 1e6-quantization edge, and a
-    null embedding (the element join drops its pairs; a null d2 would
-    rank first in the per-src top-k)."""
+    """r16 kNN rerank: the zip_with array fold must equal the exact
+    element-by-element integer sum over the same quantized rows —
+    including zero vectors, negative components, d2 ties and values at
+    the 1e6-quantization edge. (Degenerate vectors raise; see
+    tests/test_vector_format.py.)"""
     from sparkstreamingproject_spark.queries.llm12 import (
-        _exact_d2, _exact_d2_arrays, _quantized_elements, _quantized_pts)
+        _exact_d2_arrays, _quantized_pts)
     emb = spark.createDataFrame(
         [(1, [0.5, -0.25, 0.0, 1.0]),
          (2, [0.5, -0.25, 0.0, 1.0]),        # identical to 1 (d2=0)
          (3, [-1.0, -1.0, -1.0, -1.0]),
          (4, [0.0, 0.0, 0.0, 0.0]),          # zero vector
-         (5, [0.1234567, 0.7654321, -0.5, 0.5]),  # rounding edge
-         (6, None)],                         # null embedding
+         (5, [0.1234567, 0.7654321, -0.5, 0.5])],  # rounding edge
         "vec_id long, embedding array<double>")
     pairs = spark.createDataFrame(
-        [(1, 2), (1, 3), (3, 4), (4, 5), (2, 5), (5, 1), (1, 6), (6, 3)],
+        [(1, 2), (1, 3), (3, 4), (4, 5), (2, 5), (5, 1)],
         "src long, dst long")
-    got = _exact_d2_arrays(pairs, _quantized_pts(emb))
-    want = _exact_d2(pairs, _quantized_elements(emb))
-    assert _rows(got, ["src", "dst", "d2"]) == \
-        _rows(want, ["src", "dst", "d2"])
-    assert dict(got.dtypes)["d2"] == dict(want.dtypes)["d2"]
+    ptsq = _quantized_pts(emb)
+    got = _exact_d2_arrays(pairs, ptsq)
+    qv = {r.vec_id: r.qv for r in ptsq.collect()}
+    want = sorted(
+        (r.src, r.dst, sum((a - b) * (a - b)
+                           for a, b in zip(qv[r.src], qv[r.dst])))
+        for r in pairs.collect())
+    assert qv[5] == [123457, 765432, -500000, 500000]
+    assert _rows(got, ["src", "dst", "d2"]) == want
+    assert dict(got.dtypes)["d2"] == "bigint"
 
 
 # -------------------------------- verify-join b-leg prune (exactness)
