@@ -7,11 +7,18 @@ Streaming:
 - ``dim_upsert``  — last-write-wins dimension store maintenance
 - ``windows``     — watermark + tumbling/sliding/session aggregations
 - ``dedup``       — streaming dropDuplicates within watermark
+plus the maintained folds (``*_maintain``, ``*_ingest``) that keep
+sketches, rollups and indexes current per micro-batch.
 
 Offset bookkeeping (F1/F2) is gone: ``checkpointLocation`` holds the
-WAL + commit log, giving at-least-once to any sink and effectively-once
-to idempotent ones — the same guarantee the reference builds by hand
-(flush-then-commit, ``OdsBaseLogApp.scala:194,205``).
+WAL + commit log, giving at-least-once delivery to every sink — the
+same guarantee the reference builds by hand (flush-then-commit,
+``OdsBaseLogApp.scala:194,205``). The ``foreachBatch`` sinks turn
+that into effectively-once through the commit protocols in
+``manifest_commit`` (replaced state, multi-directory CDC commits,
+``ingest_batch=`` partitions, per-batch flat files); the built-in
+file sinks keep Spark's own sink log. ``compaction`` keeps a private
+rename-aside swap for rewriting ``ingest_batch=`` tables in place.
 """
 
 from .cdc_router import route_cdc_stream

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..llm.textstats import bm25_rank
-from .dedup_ingest import _maybe_read, _write
+from .manifest_commit import _maybe_read, _write
 
 
 def doc_index_rows(docs: DataFrame, id_col: str = "doc_id",

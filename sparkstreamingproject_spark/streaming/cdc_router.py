@@ -14,10 +14,9 @@ Commit protocol (r13, VERDICT r12 §next 2): every directory a batch
 produces — the per-topic fact partition AND every touched dim
 snapshot — is written under an uncommitted ``commit=<token>`` name and
 becomes visible in ONE atomic manifest rename
-(``manifest_commit.cdc_commit``). This closes the residual window the
-old per-batch-marker protocol documented (``idempotent.py``): a crash
-between topic-directory writes now leaves the whole batch invisible
-(not just replay-safe), and the watermark travels in the same rename,
+(``manifest_commit.cdc_commit``). A crash between topic-directory
+writes leaves the whole batch invisible (not just replay-safe), and
+the watermark travels in the same rename,
 so replay-vs-committed can never disagree with the data. The reference
 gets per-key atomicity from Redis SET (``OdsBaseDbApp.scala:160-164``);
 this is the whole-batch analog. Read the outputs through

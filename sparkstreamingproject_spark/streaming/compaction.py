@@ -22,12 +22,25 @@ most recent ``keep_last`` batch partitions untouched:
 - Reads see the identical relation before and after — only the file
   layout changes.
 
-Crash-safety rides the same rename-aside swap as the state tables
-(``statestore.swap_in`` with ``partition_by`` preserving the layout):
-any crash leaves the old or the new table adoptable, never neither.
-Single-writer assumption as everywhere in this package: run compaction
-between micro-batches (e.g. from the maintenance window of the job
-itself), not concurrently with a fold.
+This is the one writer in the package that REPLACES a table readers
+open by path (``spark.read.parquet(table_dir)``), so it cannot publish
+through a manifest and keeps its own rename-aside swap (``_swap_in``):
+
+1. write the compacted table to ``<table>.tmp-<token>`` (this is what
+   materializes the plan, so it still READS the current table);
+2. rename the current table aside to ``<table>.old-<token>``;
+3. rename the tmp in as the table;
+4. delete the old dir last.
+
+``_recover`` runs before every compaction and leaves a consistent
+table whatever point the last one died at: an orphan ``.tmp-*`` is
+deleted; a missing table with an ``.old-*`` beside it (crash between 2
+and 3) gets the ``.old-*`` renamed back; an ``.old-*`` beside a live
+table (crash between 3 and 4) is deleted. Either the old or the new
+table is always recoverable, never neither. Single-writer assumption
+as everywhere in this package: run compaction between micro-batches
+(e.g. from the maintenance window of the job itself), not concurrently
+with a fold.
 
 On a lakehouse format this module is ``OPTIMIZE``/``rewrite_data_files``;
 the parquet form keeps the operational story honest in this container.
@@ -35,17 +48,54 @@ the parquet form keeps the operational story honest in this container.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+import os
+import shutil
+import uuid
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-import os
-
-from .statestore import _recover
-from .statestore import swap_in as _swap_in
+from .manifest_commit import _has_parquet
 
 #: partition id the consolidated history lands in — no real foreachBatch
 #: epoch is ever negative, so retry self-exclusion can never mask it
 CONSOLIDATED = -1
+
+
+def _recover(table_dir: str) -> None:
+    """Clean up after an interrupted ``_swap_in`` (module docstring).
+    Idempotent; one listdir when there is no debris."""
+    table_dir = os.path.abspath(table_dir)
+    parent, name = os.path.split(table_dir)
+    if not os.path.isdir(parent):
+        return
+    olds = sorted(d for d in os.listdir(parent)
+                  if d.startswith(name + ".old-"))
+    if olds and not os.path.isdir(table_dir):
+        # crash between rename-aside and rename-in: the .old dir IS the
+        # complete prior table (recovery runs before every swap, so at
+        # most one .old can exist here)
+        os.rename(os.path.join(parent, olds.pop()), table_dir)
+    for d in olds:  # completed-swap leftovers
+        shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
+    for d in os.listdir(parent):  # incomplete tmp writes
+        if d.startswith(name + ".tmp-"):
+            shutil.rmtree(os.path.join(parent, d), ignore_errors=True)
+
+
+def _swap_in(new: DataFrame, table_dir: str,
+             partition_by: list[str]) -> None:
+    """Replace ``table_dir`` with ``new`` by rename-aside (module
+    docstring); ``new`` may read ``table_dir``."""
+    table_dir = os.path.abspath(table_dir)
+    token = uuid.uuid4().hex[:8]
+    tmp = f"{table_dir}.tmp-{token}"
+    new.write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
+    old = f"{table_dir}.old-{token}"
+    if os.path.isdir(table_dir):
+        os.rename(table_dir, old)
+    os.rename(tmp, table_dir)
+    shutil.rmtree(old, ignore_errors=True)
 
 
 def compact_batched_output(spark: SparkSession, table_dir: str,
@@ -60,13 +110,8 @@ def compact_batched_output(spark: SparkSession, table_dir: str,
     batch level (e.g. the IVF postings' ``cell=`` dirs, which probe
     pruning depends on). Returns a small stats dict (batches
     folded/kept, row count). No-op when there is nothing to fold."""
-    # adopt any interrupted-swap debris first; then a RECURSIVE data
-    # probe (statestore.table_exists checks only the top level — right
-    # for flat state tables, wrong for ingest_batch=* partition dirs)
     _recover(table_dir)
-    has_data = any(f.endswith(".parquet")
-                   for _r, _d, fs in os.walk(table_dir) for f in fs)
-    if not has_data:
+    if not _has_parquet(table_dir):
         return {"folded": 0, "kept": 0, "rows": 0}
     df = spark.read.parquet(table_dir)
     if "ingest_batch" not in df.columns:

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 
 from ..llm.dedup import (LSHE_BUCKET_CAP, lshe_doc_postings,
                          lshe_pairs_from_postings, word_shingles)
-from .dedup_ingest import _maybe_read, _write
+from .manifest_commit import _maybe_read, _write
 
 
 def fold_containment_index(batch: DataFrame, index_dir: str,

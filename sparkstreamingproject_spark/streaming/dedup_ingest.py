@@ -27,70 +27,19 @@ overwrites all three partitions in place — the canonical idempotent
 foreachBatch recipe, vs. the lost-survivor failure where a plain
 append-after-hash-commit retry anti-joins the in-flight docs away.
 Without a ``batch_id`` (direct batch calls), writes are plain appends
-and a caller-level retry is NOT idempotent — use
-``idempotent.idempotent_foreach_batch`` semantics or batch ids there.
+and a caller-level retry is NOT idempotent — pass a batch id there
+too. The partition discipline itself (``_write``/``_maybe_read``)
+lives in ``manifest_commit.py`` with the package's other commit
+protocols.
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..llm.dedup import band_keys
-from .manifest_commit import _has_parquet
-
-
-def _maybe_read(spark, path: str, schema: str, exclude_batch=None):
-    """Read an index relation if it exists (else an empty relation of
-    ``schema``). Streaming-written relations carry an ``ingest_batch``
-    partition column; ``exclude_batch`` masks the current micro-batch's
-    own (possibly partial, pre-crash) output so retries are idempotent
-    — partition pruning makes the exclusion free.
-
-    Empty-index detection is an explicit data-file probe, NOT a broad
-    except around the read: swallowing a real read failure (corrupt
-    footer, mixed layouts) as "empty index" would silently disable
-    dedup and re-ingest the whole batch as duplicates — corruption
-    must propagate loudly."""
-    if not os.path.isdir(path) or not _has_parquet(path):
-        return spark.createDataFrame([], schema)
-    df = spark.read.parquet(path)
-    if exclude_batch is not None and "ingest_batch" in df.columns:
-        df = df.filter(F.col("ingest_batch") != F.lit(exclude_batch))
-    return df
-
-
-def _check_layout(path: str, batch_id) -> None:
-    """Refuse to mix flat-append and ingest_batch= partition layouts on
-    one root (ADVICE r07): the mix passes silently at write time and
-    fails later at read time as a Spark partition-discovery error —
-    surface it loudly at the write that would create it."""
-    if not os.path.isdir(path):
-        return
-    has_parts = any(e.startswith("ingest_batch=")
-                    for e in os.listdir(path))
-    has_flat = any(e.endswith(".parquet") for e in os.listdir(path))
-    if batch_id is None and has_parts:
-        raise ValueError(
-            f"{path} holds ingest_batch= partitions; appending "
-            "unpartitioned files to it would corrupt partition "
-            "discovery — pass the batch_id.")
-    if batch_id is not None and has_flat:
-        raise ValueError(
-            f"{path} holds flat appended files; writing an "
-            "ingest_batch= partition into it would corrupt partition "
-            "discovery — use a fresh root for batch-id mode.")
-
-
-def _write(df: DataFrame, path: str, batch_id) -> None:
-    _check_layout(path, batch_id)
-    if batch_id is None:
-        df.write.mode("append").parquet(path)
-    else:
-        (df.write.mode("overwrite")
-         .parquet(f"{path}/ingest_batch={int(batch_id)}"))
+from .manifest_commit import _maybe_read, _write
 
 
 def ingest_batch(batch: DataFrame, index_dir: str, corpus_dir: str,

@@ -6,11 +6,14 @@ table and the upsert is an explicit MERGE-shaped batch op:
 
 1. dedup incoming batch to the newest row per key (row_number over
    version desc — deterministic under any parallelism);
-2. union with the existing table and keep the newest per key again;
-3. atomically swap the table directory.
+2. union with the committed state and keep the newest per key again;
+3. commit the result as a new state version (``manifest_commit.
+   commit_state``: version pointer and batch-id watermark move in one
+   atomic rename, the previous version stays for lazy readers).
 
 On a table format with real MERGE (Delta/Iceberg) steps 2-3 collapse
-into ``MERGE INTO``; the parquet swap keeps this container-friendly.
+into ``MERGE INTO``; the versioned parquet keeps this
+container-friendly. Read the table through ``read_dim``.
 Dimension tables are small relative to facts (that's why they broadcast)
 so the rewrite cost is bounded.
 """
@@ -21,8 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .statestore import swap_in as _swap_in
-from .statestore import table_exists as _table_exists
+from .manifest_commit import commit_state, fold_stream, read_state
 
 
 def latest_per_key(df: DataFrame, key_cols: list[str], version_col: str) -> DataFrame:
@@ -32,20 +34,21 @@ def latest_per_key(df: DataFrame, key_cols: list[str], version_col: str) -> Data
 
 
 def upsert_dim_parquet(updates: DataFrame, table_dir: str,
-                       key_cols: list[str], version_col: str) -> None:
+                       key_cols: list[str], version_col: str,
+                       batch_id: int = 0) -> None:
     spark = updates.sparkSession
     incoming = latest_per_key(updates, key_cols, version_col)
-    if _table_exists(table_dir):
-        base = spark.read.parquet(table_dir)
+    base = read_state(spark, table_dir)
+    if base is not None:
         merged = latest_per_key(base.unionByName(incoming), key_cols, version_col)
     else:
         merged = incoming
-    _swap_in(merged, table_dir)
+    commit_state(merged, table_dir, batch_id)
 
 
 def upsert_scd2_parquet(updates: DataFrame, table_dir: str, key: str,
                         ts_col: str, attr_cols: list[str],
-                        tiebreak_cols: tuple = ()) -> None:
+                        tiebreak_cols: tuple = (), batch_id: int = 0) -> None:
     """SCD2 streaming maintenance: merge a micro-batch of change rows
     into a versioned-history table (the history-preserving counterpart
     of ``upsert_dim_parquet``'s SCD1 last-write-wins).
@@ -68,8 +71,8 @@ def upsert_scd2_parquet(updates: DataFrame, table_dir: str, key: str,
     spark = updates.sparkSession
     cols = [key, ts_col, *attr_cols]
     incoming = updates.select(*cols)
-    if _table_exists(table_dir):
-        hist = spark.read.parquet(table_dir)
+    hist = read_state(spark, table_dir)
+    if hist is not None:
         keys = updates.select(key).distinct()
         untouched = hist.join(F.broadcast(keys), key, "left_anti")
         replay = (hist.join(F.broadcast(keys), key, "left_semi")
@@ -81,7 +84,7 @@ def upsert_scd2_parquet(updates: DataFrame, table_dir: str, key: str,
     else:
         merged = scd2_history(incoming.dropDuplicates(cols), key, ts_col,
                               attr_cols, tiebreak_cols)
-    _swap_in(merged, table_dir)
+    commit_state(merged, table_dir, batch_id)
 
 
 def scd2_stream(changes, table_dir: str, checkpoint: str, key: str,
@@ -89,17 +92,14 @@ def scd2_stream(changes, table_dir: str, checkpoint: str, key: str,
                 tiebreak_cols: tuple = (), trigger_seconds: int | None = None):
     """Streaming SCD2 maintenance: ``foreachBatch(upsert_scd2_parquet)``
     over a change stream — every micro-batch leaves the history table
-    correctly tiled, late data repairs in place."""
-    writer = (changes.writeStream
-              .foreachBatch(lambda b, _i: upsert_scd2_parquet(
-                  b, table_dir, key, ts_col, attr_cols, tiebreak_cols))
-              .option("checkpointLocation", checkpoint))
-    if trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    correctly tiled, late data repairs in place. Committed batch ids
+    skip against the table's watermark (``manifest_foreach_batch``)."""
+    return fold_stream(
+        changes, lambda b, i: upsert_scd2_parquet(
+            b, table_dir, key, ts_col, attr_cols, tiebreak_cols, i),
+        table_dir, checkpoint, trigger_seconds)
 
 
-def read_dim(spark, table_dir: str) -> DataFrame:
-    return spark.read.parquet(table_dir)
+def read_dim(spark, table_dir: str) -> DataFrame | None:
+    """The committed dim table (None before the first commit)."""
+    return read_state(spark, table_dir)

@@ -30,8 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..queries.llm14 import dsir_bucket_stats, dsir_doc_buckets
-from .manifest_commit import (commit_state, manifest_foreach_batch,
-                              read_state)
+from .manifest_commit import commit_state, fold_stream, read_state
 
 _STATS_SCHEMA = "bucket long, c_raw long, c_tgt long"
 
@@ -57,13 +56,9 @@ def dsir_stats_stream(docs_stream: DataFrame, table_dir: str,
                       checkpoint_dir: str):
     """Wire a streaming documents source into the manifest-committed
     additive stats fold."""
-    write = manifest_foreach_batch(
-        lambda b, i: merge_dsir_stats(b, table_dir, i), table_dir)
-    return (docs_stream.writeStream
-            .foreachBatch(write)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return fold_stream(docs_stream,
+                       lambda b, i: merge_dsir_stats(b, table_dir, i),
+                       table_dir, checkpoint_dir)
 
 
 def score_against_model(docs: DataFrame, table_dir: str) -> DataFrame:

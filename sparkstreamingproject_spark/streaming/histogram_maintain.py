@@ -19,8 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..queries.sketches2 import value_bins
-from .manifest_commit import (commit_state, manifest_foreach_batch,
-                              read_state)
+from .manifest_commit import commit_state, fold_stream, read_state
 
 
 def merge_histogram(batch: DataFrame, table_dir: str,
@@ -43,10 +42,6 @@ def histogram_rollup_stream(events_stream: DataFrame, table_dir: str,
                             checkpoint_dir: str):
     """Wire a streaming events source into the manifest-committed
     histogram fold (availableNow)."""
-    fold = manifest_foreach_batch(
-        lambda b, i: merge_histogram(b, table_dir, i), table_dir)
-    return (events_stream.writeStream
-            .foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return fold_stream(events_stream,
+                       lambda b, i: merge_histogram(b, table_dir, i),
+                       table_dir, checkpoint_dir)

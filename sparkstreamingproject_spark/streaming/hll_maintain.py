@@ -7,9 +7,9 @@ user in two micro-batches must count once. The mergeable-sketch answer
 is to persist the HLL REGISTERS (day, bucket, max leading-zero rank)
 and fold each micro-batch in with an element-wise max — max is
 idempotent and commutative, so the merged registers equal the
-registers of the union of all rows ever seen, replay or not. That
-idempotence is stronger than the additive case: this sink is correct
-even under at-least-once delivery, no batch-id marker needed.
+registers of the union of all rows ever seen, replay or not. The
+registers commit through the package's one state protocol
+(``manifest_commit.commit_state``), like the additive folds.
 
 Register arithmetic is byte-identical to the batch
 `sketch_hll_distinct` query (md5 bucket + bin()-length rank — integer
@@ -25,10 +25,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..queries.sketches import _HLL_M as HLL_M  # one register-count constant
-# max-merge is replay-idempotent, so the plain swap protocol suffices
-# (rollup_maintain moved to manifest_commit in r12 — no re-export left)
-from .statestore import swap_in as _swap_in
-from .statestore import table_exists as _table_exists
+from .manifest_commit import commit_state, fold_stream, read_state
 
 
 def day_user_registers(events: DataFrame) -> DataFrame:
@@ -48,18 +45,19 @@ def day_user_registers(events: DataFrame) -> DataFrame:
             .groupBy("day", "bucket").agg(F.max("m").alias("m")))
 
 
-def merge_hll_registers(batch: DataFrame, table_dir: str) -> None:
+def merge_hll_registers(batch: DataFrame, table_dir: str,
+                        batch_id: int = 0) -> None:
     """foreachBatch body: fold one micro-batch's per-day registers
-    into the persisted register table by (day, bucket) max."""
+    into the committed register table by (day, bucket) max."""
     spark = batch.sparkSession
     part = day_user_registers(batch)
-    if _table_exists(table_dir):
-        base = spark.read.parquet(table_dir)
+    base = read_state(spark, table_dir)
+    if base is not None:
         merged = (base.unionByName(part)
                   .groupBy("day", "bucket").agg(F.max("m").alias("m")))
     else:
         merged = part
-    _swap_in(merged.coalesce(1), table_dir)
+    commit_state(merged.coalesce(1), table_dir, batch_id)
 
 
 def estimate_daily_distinct(registers: DataFrame) -> DataFrame:
@@ -90,8 +88,6 @@ def estimate_daily_distinct(registers: DataFrame) -> DataFrame:
 def hll_rollup_stream(events_stream: DataFrame, table_dir: str,
                       checkpoint_dir: str):
     """Wire a streaming events source into the register-merge sink."""
-    return (events_stream.writeStream
-            .foreachBatch(lambda b, _id: merge_hll_registers(b, table_dir))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return fold_stream(events_stream,
+                       lambda b, i: merge_hll_registers(b, table_dir, i),
+                       table_dir, checkpoint_dir)

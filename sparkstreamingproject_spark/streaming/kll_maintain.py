@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from ..queries.sketches2 import (KLL_K, kll_level, kll_order_rows,
                                  kll_quantile_read, kll_sample)
-from .dedup_ingest import _maybe_read, _write
+from .manifest_commit import _maybe_read, _write
 
 
 def _level_py(n: int, k: int = KLL_K) -> int:

@@ -6,8 +6,8 @@ bottom-k sketch folds with the other idempotent lattice merge: set
 UNION then truncate to the k smallest hashes per group. Union and
 min-k-truncation are commutative, associative, and idempotent, so the
 maintained state equals the sketch of the union of all rows ever seen
-— correct under at-least-once replay with no batch-id markers (same
-replay posture as HLL max, stronger than the additive rollup).
+— a replayed batch folds to the same state (same posture as HLL
+max). State commits through ``manifest_commit.commit_state``.
 
 Why keep BOTH sketch families maintained: HLL is smaller (fixed
 registers) but only counts; KMV's state is the actual k smallest
@@ -33,8 +33,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..queries.sketches import _HEX15, _KMV_K
-from .statestore import swap_in as _swap_in
-from .statestore import table_exists as _table_exists
+from .manifest_commit import commit_state, fold_stream, read_state
 
 
 def type_user_hashes(events: DataFrame) -> DataFrame:
@@ -57,20 +56,20 @@ def _bottom_k(hashes: DataFrame, k: int) -> DataFrame:
 
 
 def merge_kmv_bottomk(batch: DataFrame, table_dir: str,
-                      k: int = _KMV_K) -> None:
+                      k: int = _KMV_K, batch_id: int = 0) -> None:
     """foreachBatch body: fold one micro-batch's distinct hashes into
-    the persisted per-type bottom-k table. The union never exceeds
+    the committed per-type bottom-k table. The union never exceeds
     state + batch-distinct rows, and the window re-truncates to k per
     type — the merge is the k-minimum lattice join, so replaying an
     already-folded batch is a no-op."""
     spark = batch.sparkSession
     part = type_user_hashes(batch)
-    if _table_exists(table_dir):
-        base = spark.read.parquet(table_dir)
+    base = read_state(spark, table_dir)
+    if base is not None:
         merged = _bottom_k(base.unionByName(part).distinct(), k)
     else:
         merged = _bottom_k(part, k)
-    _swap_in(merged.coalesce(1), table_dir)
+    commit_state(merged.coalesce(1), table_dir, batch_id)
 
 
 def estimate_distinct_by_type(sketch: DataFrame,
@@ -92,8 +91,6 @@ def estimate_distinct_by_type(sketch: DataFrame,
 def maintain_kmv_stream(events_stream: DataFrame, table_dir: str,
                         checkpoint_dir: str, k: int = _KMV_K):
     """Wire a streaming events source into the bottom-k fold."""
-    return (events_stream.writeStream
-            .foreachBatch(lambda b, _id: merge_kmv_bottomk(b, table_dir, k))
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return fold_stream(events_stream,
+                       lambda b, i: merge_kmv_bottomk(b, table_dir, k, i),
+                       table_dir, checkpoint_dir)

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..llm.multimodal import landmark_postings
-from .dedup_ingest import _maybe_read, _write
+from .manifest_commit import _maybe_read, _write
 
 MATCH_MIN_SHARED = 3  # catalog hit: >= 3 shared landmarks
 

@@ -1,15 +1,30 @@
-"""Manifest-last state commit — closes the additive-fold double-count
-window (VERDICT r11 §next 4) with plain parquet.
+"""Commit protocols for streaming state and outputs: every way a
+micro-batch's writes become visible lives in this module.
 
-The marker protocol (``idempotent.py`` + ``statestore.swap_in``) has a
-documented residual window for ADDITIVE folds: the data swap and the
-batch-id marker are two separate renames, so a crash after the swap
-lands but before the marker does replays the fold against the
-POST-swap state and double-counts that one batch.
+Structured Streaming replays an uncommitted micro-batch under the same
+batch id, so every sink sees at-least-once delivery. The reference has
+the same exposure: it flushes its sinks and then commits offsets
+(``OdsBaseLogApp.scala:194,205``). Each writer in ``streaming/`` is
+made replay-safe by one of four protocols:
 
-This module makes the state pointer and the batch-id watermark ONE
-atomic rename — a single-table miniature of what Delta/Iceberg's
-commit log does:
+- ``commit_state`` / ``commit_version`` — one REPLACED state table per
+  fold (sketches, rollups, dims): immutable versions plus one manifest
+  carrying the version pointer and the batch-id watermark together
+  (below);
+- ``cdc_commit`` — the multi-directory generalization for the CDC
+  router and the stream-stream join sink (section below);
+- ``_write`` — APPEND-ONLY index relations: each batch overwrites its
+  own ``ingest_batch=<id>`` partition, and reads can mask the current
+  batch's partial output (``_maybe_read``);
+- ``write_batch_files`` — APPEND-ONLY flat sinks (the five-way log
+  split): each batch replaces its own ``part-b<id>-*`` files, so
+  ``<out>/<topic>`` stays one flat parquet directory.
+
+``compaction.py`` keeps its own rename-aside swap: it rewrites a whole
+``ingest_batch=`` table in place, and readers open that table by path.
+
+Manifest-last state commit — a single-table miniature of what
+Delta/Iceberg's commit log does:
 
   <table>.v-<token>/   immutable state versions (plain parquet)
   <table>.manifest     one JSON line {"version": token, "batch_id": N}
@@ -19,26 +34,26 @@ commit log does:
 A merge reads the version the manifest names, writes a NEW version
 directory (never touching the old one — so the merge plan's lineage
 is never starved), then replaces the manifest. Every crash point is
-now exact:
+exact:
 
 - crash while writing the new version, or after it but BEFORE the
-  manifest replace (the old protocol's residual window): the manifest
-  still names the pre-merge version AND the pre-merge batch id — the
-  replay re-merges from the OLD state; the orphan version dir is
-  garbage-collected at the next successful commit;
+  manifest replace: the manifest still names the pre-merge version
+  AND the pre-merge batch id — the replay re-merges from the OLD
+  state; the orphan version dir is garbage-collected at the next
+  successful commit;
 - crash AFTER the manifest replace: the manifest's batch_id watermark
   names this batch — the replay is skipped.
 
 There is no point at which the state includes a batch the watermark
-does not (or vice versa), which is exactly the atomicity the marker
-protocol lacked.
+does not (or vice versa), so additive folds (which double-count a
+re-merged batch) and lattice folds (max, bit_or, LWW, bottom-k) share
+one protocol.
 
-Single-writer assumption (same as ``statestore``): Structured
-Streaming serializes foreachBatch per query. GC of superseded version
-dirs runs inside the committing writer and RETAINS the immediately
-previous COMMITTED version (the manifest records its predecessor
-token, so crashed-attempt orphans are still collected immediately):
-``read_state`` hands out a
+Single-writer assumption: Structured Streaming serializes foreachBatch
+per query. GC of superseded version dirs runs inside the committing
+writer and RETAINS the immediately previous COMMITTED version (the
+manifest records its predecessor token, so crashed-attempt orphans
+are still collected immediately): ``read_state`` hands out a
 LAZY DataFrame bound to the resolved version path, so an action
 executed after one subsequent commit would otherwise hit
 FileNotFoundException — retention gives same-process lazy readers a
@@ -49,30 +64,23 @@ eagerly materialize (``.cache()`` + an action, or ``.collect()``).
 
 Batch-id watermark, not per-id markers: foreachBatch epoch ids are
 monotonically increasing, so `batch_id <= watermark` ⇔ already
-committed — one integer replaces the marker directory.
+committed — one integer replaces a marker directory.
 
 TABLE↔CHECKPOINT COUPLING: the batch-id sequence is scoped to the
 streaming CHECKPOINT, but the watermark persists with the state TABLE.
 They must be paired for life. Re-pointing a stream at an existing
 table with a FRESH checkpoint restarts batch ids at 0 while the
-table's watermark stays high — naively every new batch would be
-"skipped as a replay" and silently dropped. ``manifest_foreach_batch``
-detects the signature of that mistake (incoming id strictly below
-the watermark — a genuine Structured Streaming replay only ever
-re-delivers the tail batch, id == watermark, because the engine
-commits epoch N-1 before starting N) and raises instead of silently
-skipping.
-
-LEGACY LAYOUT ADOPTION: folds that predate this module kept their
-state as a plain parquet directory at ``table_dir`` itself (the
-``statestore.swap_in`` layout). If no manifest exists but ``table_dir``
-is such a directory, the first ``manifest_info``/``read_state``/
-``commit_state`` call ADOPTS it: the directory is renamed to a
-version dir and a manifest is written pointing at it (batch_id −1 —
-the legacy watermark lived in per-id marker files under the
-checkpoint, which still guard replays of old batches through their
-own wrapper). Without adoption an upgrade would silently reset
-accumulated state to empty while the old data sat orphaned.
+table's watermark stays put — naively every new batch up to the
+watermark would be "skipped as a replay" and silently dropped. So each
+commit also records the streaming query id it ran under (Spark keeps
+that id across restarts from one checkpoint; None for a direct call
+outside a stream), and the stream wrappers (``manifest_foreach_batch``,
+``cdc_foreach_batch``) skip a batch only when it is the committed tail
+(id == watermark — the engine commits epoch N-1 before starting N, so
+a genuine replay only ever re-delivers the tail) AND comes from the
+query that committed it. Any other id at or below the watermark raises
+instead of silently skipping, and a commit never moves the watermark
+backwards.
 """
 
 from __future__ import annotations
@@ -82,69 +90,62 @@ import os
 import shutil
 import uuid
 
+from pyspark import SparkContext
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
-def _has_parquet(path: str) -> bool:
-    for _root, _dirs, files in os.walk(path):
-        if any(f.endswith(".parquet") for f in files):
-            return True
-    return False
+def _query_id() -> str | None:
+    """The streaming query id inside a foreachBatch call (stable
+    across restarts from one checkpoint); None outside a stream."""
+    return SparkContext.getOrCreate().getLocalProperty(
+        "sql.streaming.queryId")
+
+
+def _check_forward(batch_id: int, watermark: int, where: str) -> None:
+    if int(batch_id) < watermark:
+        raise ValueError(
+            f"batch_id {batch_id} is below the committed watermark "
+            f"{watermark} of {where!r}: a commit never moves the "
+            "watermark backwards (pass the next batch id).")
+
+
+def _replayed(batch_id: int, committed: dict, where: str) -> bool:
+    """True when ``batch_id`` re-delivers the committed tail batch of
+    the same streaming query (skip it); False when it is new. Raises
+    on any other id at or below the watermark (module docstring,
+    TABLE↔CHECKPOINT COUPLING)."""
+    watermark = int(committed["batch_id"])
+    if int(batch_id) > watermark:
+        return False
+    query = _query_id()
+    if int(batch_id) == watermark and committed.get("query") == query:
+        return True
+    raise RuntimeError(
+        f"batch_id {batch_id} of streaming query {query} is at or below "
+        f"the watermark {watermark} that query {committed.get('query')} "
+        f"committed to {where!r}: this stream's checkpoint does not "
+        "belong to this output (a fresh checkpoint restarts ids at 0, "
+        "and skipping would silently drop new data). Pair the output "
+        "with its original checkpoint, or start a new output.")
 
 
 def _manifest_path(table_dir: str) -> str:
     return os.path.abspath(table_dir) + ".manifest"
 
 
-def _adopt_legacy(table_dir: str) -> tuple[str, int] | None:
-    """Adopt a pre-manifest ``statestore.swap_in`` state directory
-    sitting at ``table_dir`` itself: rename it to a version dir and
-    commit a manifest naming it (see module docstring). Returns the
-    new (token, batch_id) or None if there is nothing to adopt.
-
-    Crash-resumable: a crash between the rename and the manifest
-    write leaves an orphan ``.v-legacy-*`` dir with no manifest — the
-    next touch finds it and finishes the manifest write instead of
-    reporting empty state (the very bug class adoption exists to
-    prevent)."""
-    table_dir = os.path.abspath(table_dir)
-    token = None
-    if os.path.isdir(table_dir) and any(
-            f.endswith(".parquet") or f == "_SUCCESS"
-            for f in os.listdir(table_dir)):
-        token = "legacy-" + uuid.uuid4().hex[:8]
-        os.rename(table_dir, f"{table_dir}.v-{token}")
-    else:
-        # resume a crashed adoption: orphan legacy version, no manifest
-        parent, name = os.path.split(table_dir)  # abspath'd: parent != ""
-        orphans = sorted(d for d in os.listdir(parent)
-                         if d.startswith(f"{name}.v-legacy-")) \
-            if os.path.isdir(parent) else []
-        if orphans:
-            token = orphans[-1].split(".v-", 1)[1]
-    if token is None:
-        return None
-    tmp = f"{table_dir}.manifest.tmp-{token}"
-    with open(tmp, "w") as f:
-        json.dump({"version": token, "batch_id": -1}, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, _manifest_path(table_dir))
-    return token, -1
+def _manifest(table_dir: str) -> dict:
+    p = _manifest_path(table_dir)
+    if not os.path.exists(p):
+        return {"version": None, "batch_id": -1}
+    with open(p) as f:
+        return json.load(f)
 
 
 def manifest_info(table_dir: str) -> tuple[str | None, int]:
     """(current version token, last committed batch id); (None, -1)
-    before the first commit. A legacy plain-parquet directory at
-    ``table_dir`` is adopted as the initial version on first touch."""
-    p = _manifest_path(table_dir)
-    if not os.path.exists(p):
-        adopted = _adopt_legacy(table_dir)
-        if adopted is not None:
-            return adopted
-        return None, -1
-    with open(p) as f:
-        m = json.load(f)
+    before the first commit."""
+    m = _manifest(table_dir)
     return m["version"], int(m["batch_id"])
 
 
@@ -157,8 +158,17 @@ def state_path(table_dir: str) -> str | None:
 
 def read_state(spark, table_dir: str, schema: str | None = None):
     """The committed state relation, or an empty relation of
-    ``schema`` (None → Python None) before the first commit."""
+    ``schema`` (None → Python None) before the first commit.
+
+    Raises when there is no manifest but ``table_dir`` itself holds
+    parquet: that is the retired rename-aside layout, and starting
+    from empty state beside it would silently drop its data."""
     p = state_path(table_dir)
+    if p is None and _has_parquet(table_dir):
+        raise RuntimeError(
+            f"{table_dir!r} holds parquet but no manifest: a state "
+            "table in the old rename-aside layout, which is no longer "
+            "read. Rebuild it through this fold, or move it away.")
     if p is None or not os.path.isdir(p):
         return None if schema is None else spark.createDataFrame([], schema)
     return spark.read.parquet(p)
@@ -172,7 +182,6 @@ def commit_state(merged: DataFrame, table_dir: str, batch_id: int) -> None:
     and committed."""
     table_dir = os.path.abspath(table_dir)
     token = uuid.uuid4().hex[:8]
-    manifest_info(table_dir)  # adopt a legacy layout before writing
     merged.write.mode("overwrite").parquet(f"{table_dir}.v-{token}")
     commit_version(table_dir, token, batch_id)
 
@@ -183,13 +192,16 @@ def commit_version(table_dir: str, token: str, batch_id: int) -> None:
     that are directory TREES (e.g. the semantic-dedup fold's
     centroids/assigned/pairs, ``semantic_maintain.py``) can assemble
     the version themselves and still get the one-rename commit + GC
-    discipline."""
+    discipline. Refuses a ``batch_id`` below the watermark; the
+    refused version dir is collected by the next commit."""
     table_dir = os.path.abspath(table_dir)
-    prev, _ = manifest_info(table_dir)
+    m = _manifest(table_dir)
+    _check_forward(batch_id, int(m["batch_id"]), table_dir)
+    prev = m["version"]
     tmp = f"{table_dir}.manifest.tmp-{token}"
     with open(tmp, "w") as f:
         json.dump({"version": token, "batch_id": int(batch_id),
-                   "prev": prev}, f)
+                   "prev": prev, "query": _query_id()}, f)
         f.flush()
         os.fsync(f.fileno())
     os.replace(tmp, _manifest_path(table_dir))  # THE commit point
@@ -204,13 +216,12 @@ def _gc(table_dir: str, keep: set[str | None]) -> None:
     more commit (module docstring) while orphans from crashed attempts
     are collected immediately.
 
-    A residual directory at ``table_dir`` ITSELF (the pre-manifest
-    legacy layout of a directory-TREE state) is deliberately NOT
-    touched here: this generic layer cannot tell a superseded tree
-    state from foreign data ``_adopt_legacy`` declined to adopt, and
-    deleting the latter would be unrecoverable. The module that owns
-    the tree layout retires its own raw dir once it has had a full
-    commit of grace (`semantic_maintain.refresh_semantic_state`)."""
+    A directory at ``table_dir`` ITSELF (e.g. the pre-refresh tree of
+    a semantic-dedup state) is deliberately NOT touched here: this
+    generic layer cannot tell a superseded tree state from foreign
+    data, and deleting the latter would be unrecoverable. The module
+    that owns the tree layout retires its own raw dir once it has had
+    a full commit of grace (`semantic_maintain.refresh_semantic_state`)."""
     parent, name = os.path.split(table_dir)  # abspath'd: parent != ""
     live = {f"{name}.v-{t}" for t in keep if t}
     for d in os.listdir(parent):
@@ -237,7 +248,7 @@ def _gc(table_dir: str, keep: set[str | None]) -> None:
 #   facts/commit=<token>/topic=<T>/part-*.parquet   (k=v dir names so
 #       Spark partition discovery works across committed roots)
 #   dim/<table>/commit=<token>/part-*.parquet
-#   .cdc.manifest    {"batch_id": N,
+#   .cdc.manifest    {"batch_id": N, "query": id|null,
 #                     "facts": {batch_id: token, ...},     append log
 #                     "dims": {table: token, ...},         current
 #                     "dim_prev": {table: token|null}}     GC grace
@@ -251,115 +262,11 @@ def _gc(table_dir: str, keep: set[str | None]) -> None:
 _CDC_MANIFEST = ".cdc.manifest"
 
 
-def _cdc_adopt_legacy(root: str) -> dict | None:
-    """Adopt a pre-manifest CDC output (the r12 marker-protocol
-    layout: ``facts/batch_id=N/topic=T`` partitions + ``dim/<t>``
-    swap_in tables) on first touch — same rationale as
-    ``_adopt_legacy`` above: without adoption the new readers would
-    silently show an empty output and the dim merge would reset LWW
-    state while the old data sat orphaned. Fact dirs rename to
-    ``commit=legacy-N`` (their files lack the batch_id data column;
-    it reads as NULL for adopted rows), dim tables move under a
-    ``commit=legacy-*`` version; the watermark adopts the highest
-    adopted batch id. Only COMPLETE fact dirs (``_SUCCESS`` marker)
-    adopt — a partial dir from a mid-write crash stays un-adopted and
-    below the watermark, so the engine's replay of that batch re-runs
-    it fresh (the old protocol's own recovery path). Crash-resumable
-    on BOTH sides: dims park at ``<t>.adopt-<token>`` (resumed below),
-    and fact dirs already renamed to ``commit=legacy-N`` by a crashed
-    attempt are re-discovered through the token's embedded batch id.
-    Returns the adopted manifest, or None if there is nothing
-    legacy-shaped to adopt."""
-    root = os.path.abspath(root)
-    facts_root = os.path.join(root, "facts")
-    dim_root = os.path.join(root, "dim")
-    # resume a crashed dim adoption first: data parked at
-    # <t>.adopt-<token> with dim/<t> renamed away — move it back into
-    # place as the version dir before the normal scan re-adopts it
-    for d in (os.listdir(dim_root) if os.path.isdir(dim_root) else []):
-        if ".adopt-" in d:
-            t, token = d.split(".adopt-", 1)
-            tdir = os.path.join(dim_root, t)
-            os.makedirs(tdir, exist_ok=True)
-            os.rename(os.path.join(dim_root, d),
-                      os.path.join(tdir, f"commit={token}"))
-    fact_entries = (os.listdir(facts_root) if os.path.isdir(facts_root)
-                    else [])
-    legacy_facts = sorted(
-        d for d in fact_entries
-        if d.startswith("batch_id=")
-        and os.path.exists(os.path.join(facts_root, d, "_SUCCESS")))
-    # resume a crashed fact adoption: dirs an earlier attempt already
-    # renamed to commit=legacy-N before dying pre-manifest — the token
-    # deterministically encodes the batch id, so fold them back in
-    # (without this they would be invisible to readers and GC'd as
-    # orphans at the next cdc_commit: permanent data loss). Guarded
-    # like the batch_id= scan above: a genuine resumed dir is a
-    # directory with a numeric id and the _SUCCESS marker the original
-    # complete batch dir carried through the rename; anything else at
-    # that name is debris and is left alone for manual inspection
-    # rather than wedging every cdc_manifest_info call on int().
-    resumed_facts = sorted(
-        d for d in fact_entries
-        if d.startswith("commit=legacy-")
-        and d.split("legacy-", 1)[1].isdigit()
-        and os.path.exists(os.path.join(facts_root, d, "_SUCCESS")))
-    legacy_dims = sorted(
-        t for t in (os.listdir(dim_root) if os.path.isdir(dim_root)
-                    else [])
-        if os.path.isdir(os.path.join(dim_root, t))
-        and (any(f.endswith(".parquet") or f == "_SUCCESS"
-                 for f in os.listdir(os.path.join(dim_root, t)))
-             or any(f.startswith("commit=legacy-")
-                    for f in os.listdir(os.path.join(dim_root, t)))))
-    if not legacy_facts and not legacy_dims and not resumed_facts:
-        return None
-    m = {"batch_id": -1, "facts": {}, "dims": {}, "dim_prev": {}}
-    for d in resumed_facts:
-        token = d.split("=", 1)[1]
-        n = int(token.split("legacy-", 1)[1])
-        m["facts"][str(n)] = token
-        m["batch_id"] = max(m["batch_id"], n)
-    for d in legacy_facts:
-        n = int(d.split("=", 1)[1])
-        token = f"legacy-{n}"
-        os.rename(os.path.join(facts_root, d),
-                  os.path.join(facts_root, f"commit={token}"))
-        m["facts"][str(n)] = token
-        m["batch_id"] = max(m["batch_id"], n)
-    for t in legacy_dims:
-        tdir = os.path.join(dim_root, t)
-        resumed = sorted(f for f in os.listdir(tdir)
-                         if f.startswith("commit=legacy-"))
-        if resumed:  # already version-shaped by the resume pass above
-            token = resumed[-1].split("=", 1)[1]
-        else:
-            token = "legacy-" + uuid.uuid4().hex[:8]
-            vdir = os.path.join(tdir, f"commit={token}")
-            staged = tdir + f".adopt-{token}"
-            os.rename(tdir, staged)
-            os.makedirs(tdir)
-            os.rename(staged, vdir)
-        m["dims"][t] = token
-        m["dim_prev"][t] = None
-    tmp = os.path.join(root, f"{_CDC_MANIFEST}.tmp-adopt")
-    with open(tmp, "w") as f:
-        json.dump(m, f)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(root, _CDC_MANIFEST))
-    return m
-
-
 def cdc_manifest_info(root: str) -> dict:
-    """The committed multi-directory manifest; adopts a legacy
-    (pre-manifest) CDC layout on first touch; an empty pre-first-
-    commit shape (batch_id -1) when neither exists."""
+    """The committed multi-directory manifest, or an empty
+    pre-first-commit shape (batch_id -1)."""
     p = os.path.join(os.path.abspath(root), _CDC_MANIFEST)
     if not os.path.exists(p):
-        adopted = _cdc_adopt_legacy(root)
-        if adopted is not None:
-            return adopted
         return {"batch_id": -1, "facts": {}, "dims": {}, "dim_prev": {}}
     with open(p) as f:
         return json.load(f)
@@ -374,7 +281,8 @@ def cdc_commit(root: str, batch_id: int, fact_token: str | None,
     older than the per-table predecessor)."""
     root = os.path.abspath(root)
     m = cdc_manifest_info(root)
-    new = {"batch_id": int(batch_id),
+    _check_forward(batch_id, int(m["batch_id"]), root)
+    new = {"batch_id": int(batch_id), "query": _query_id(),
            "facts": dict(m["facts"]),
            "dims": dict(m["dims"]),
            "dim_prev": dict(m.get("dim_prev", {}))}
@@ -427,13 +335,8 @@ def read_cdc_facts(spark, root: str,
     Empty relation of ``schema`` before the first fact commit (the
     default is the CDC router's payload shape; append-log reuses like
     the stream-stream join sink pass their own). ``schema`` is passed
-    to the reader EXPLICITLY: adopted ``commit=legacy-*`` files lack
-    the batch_id data column, and without a declared schema the
-    resolved one would depend on which parquet footer Spark samples —
-    batch_id could silently vanish for every row. With the explicit
-    schema, legacy rows read batch_id as NULL, new rows as written
-    (and the scan skips footer schema-merging entirely — the cheap
-    path at scale)."""
+    to the reader EXPLICITLY, so the scan skips footer schema
+    inference entirely — the cheap path at scale."""
     root = os.path.abspath(root)
     tokens = sorted(set(cdc_manifest_info(root)["facts"].values()))
     if not tokens:
@@ -456,48 +359,143 @@ def read_cdc_dim(spark, root: str, table: str, schema: str | None = None):
 
 
 def cdc_foreach_batch(route_fn, root: str):
-    """Watermark wrapper for the router: committed batch ids skip; a
-    deep gap (fresh checkpoint against an existing output — see
-    TABLE↔CHECKPOINT COUPLING above) raises instead of silently
-    dropping data."""
+    """Watermark wrapper for the router: a replay of the committed
+    tail batch skips; any other id at or below the watermark (a fresh
+    checkpoint against an existing output — see TABLE↔CHECKPOINT
+    COUPLING above) raises instead of silently dropping data."""
     def wrapped(batch_df, batch_id: int) -> None:
-        watermark = cdc_manifest_info(root)["batch_id"]
-        if int(batch_id) < watermark:
-            raise RuntimeError(
-                f"batch_id {batch_id} is below the "
-                f"committed watermark {watermark} for {root!r}: this "
-                "stream's checkpoint does not belong to this output "
-                "directory. Pair them, or start a new output dir.")
-        if int(batch_id) == watermark:
-            return  # replay of the committed tail batch
-        route_fn(batch_df, batch_id)
+        if not _replayed(batch_id, cdc_manifest_info(root), root):
+            route_fn(batch_df, batch_id)
 
     return wrapped
 
 
 def manifest_foreach_batch(merge_fn, table_dir: str):
     """Wrap a ``(batch_df, batch_id) -> None`` merge (which must end
-    in ``commit_state(..., batch_id)``) so batch ids at or below the
-    committed watermark are skipped.
-
-    Raises instead of skipping when the incoming id is STRICTLY below
-    the watermark: a genuine Structured Streaming replay only
-    re-delivers the tail (uncommitted) batch (id == watermark), so any
-    lower id means a fresh checkpoint was pointed at an existing state
-    table — silent skipping there drops genuinely new data (module
+    in ``commit_state(..., batch_id)``) so a replay of the committed
+    tail batch is skipped. Any other id at or below the watermark
+    means a checkpoint that does not belong to this state table, and
+    raises: skipping there would drop genuinely new data (module
     docstring, TABLE↔CHECKPOINT COUPLING)."""
     def wrapped(batch_df, batch_id: int) -> None:
-        _, watermark = manifest_info(table_dir)
-        if int(batch_id) < watermark:
-            raise RuntimeError(
-                f"batch_id {batch_id} is below the "
-                f"committed watermark {watermark} for {table_dir!r}: "
-                "this stream's checkpoint does not belong to this state "
-                "table (a fresh checkpoint restarts ids at 0, and "
-                "skipping would silently drop new data). Pair the table "
-                "with its original checkpoint, or start a new table.")
-        if int(batch_id) == watermark:
-            return  # replay of the committed tail batch
-        merge_fn(batch_df, batch_id)
+        if not _replayed(batch_id, _manifest(table_dir), table_dir):
+            merge_fn(batch_df, batch_id)
 
     return wrapped
+
+
+def fold_stream(stream: DataFrame, merge_fn, table_dir: str,
+                checkpoint: str, trigger_seconds: int | None = None):
+    """Start ``stream`` into a replaced-state fold: every micro-batch
+    runs ``merge_fn(batch_df, batch_id)`` (ending in ``commit_state``)
+    through ``manifest_foreach_batch``. ``trigger_seconds`` None →
+    availableNow (drain and stop); an int → a processing-time trigger."""
+    writer = (stream.writeStream
+              .foreachBatch(manifest_foreach_batch(merge_fn, table_dir))
+              .option("checkpointLocation", checkpoint))
+    if trigger_seconds is None:
+        return writer.trigger(availableNow=True).start()
+    return writer.trigger(
+        processingTime=f"{trigger_seconds} seconds").start()
+
+
+# ------------------------------------------------- batch-id-keyed appends
+# Append-only outputs need no manifest: a batch's rows never change once
+# written, so it is enough that a replay of batch id N REPLACES what an
+# earlier attempt of N left behind instead of adding to it.
+
+
+def _has_parquet(path: str) -> bool:
+    for _root, _dirs, files in os.walk(path):
+        if any(f.endswith(".parquet") for f in files):
+            return True
+    return False
+
+
+def _maybe_read(spark, path: str, schema: str, exclude_batch=None):
+    """Read an index relation if it exists (else an empty relation of
+    ``schema``). Streaming-written relations carry an ``ingest_batch``
+    partition column; ``exclude_batch`` masks the current micro-batch's
+    own (possibly partial, pre-crash) output so retries are idempotent
+    — partition pruning makes the exclusion free.
+
+    Empty-index detection is an explicit data-file probe, NOT a broad
+    except around the read: swallowing a real read failure (corrupt
+    footer, mixed layouts) as "empty index" would silently disable
+    dedup and re-ingest the whole batch as duplicates — corruption
+    must propagate loudly."""
+    if not os.path.isdir(path) or not _has_parquet(path):
+        return spark.createDataFrame([], schema)
+    df = spark.read.parquet(path)
+    if exclude_batch is not None and "ingest_batch" in df.columns:
+        df = df.filter(F.col("ingest_batch") != F.lit(exclude_batch))
+    return df
+
+
+def _check_layout(path: str, batch_id) -> None:
+    """Refuse to mix flat-append and ingest_batch= partition layouts on
+    one root (ADVICE r07): the mix passes silently at write time and
+    fails later at read time as a Spark partition-discovery error —
+    surface it loudly at the write that would create it."""
+    if not os.path.isdir(path):
+        return
+    has_parts = any(e.startswith("ingest_batch=")
+                    for e in os.listdir(path))
+    has_flat = any(e.endswith(".parquet") for e in os.listdir(path))
+    if batch_id is None and has_parts:
+        raise ValueError(
+            f"{path} holds ingest_batch= partitions; appending "
+            "unpartitioned files to it would corrupt partition "
+            "discovery — pass the batch_id.")
+    if batch_id is not None and has_flat:
+        raise ValueError(
+            f"{path} holds flat appended files; writing an "
+            "ingest_batch= partition into it would corrupt partition "
+            "discovery — use a fresh root for batch-id mode.")
+
+
+def _write(df: DataFrame, path: str, batch_id) -> None:
+    _check_layout(path, batch_id)
+    if batch_id is None:
+        df.write.mode("append").parquet(path)
+    else:
+        (df.write.mode("overwrite")
+         .parquet(f"{path}/ingest_batch={int(batch_id)}"))
+
+
+def _publish(fs, src, dst) -> None:
+    if not fs.rename(src, dst):
+        raise OSError(f"could not rename {src} to {dst}")
+
+
+def write_batch_files(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write ``df`` as batch ``batch_id``'s files of the flat parquet
+    directory ``path``, replacing whatever an earlier attempt of the
+    same batch left there.
+
+    The batch's files are named ``part-b<id>-*``: they are deleted
+    first, the frame is written to the hidden staging directory
+    ``_batch-<id>/`` (Spark's reader skips ``_``-prefixed names), and
+    its part files are renamed into ``path``. A crash at any step
+    leaves at most this batch's files partly published, and the
+    replay deletes and rewrites them; other batches' files are never
+    touched. As with a plain append, readers may see a partial batch
+    until the replay finishes. The listing, renames and deletes go
+    through the Hadoop FileSystem of ``path``, as Spark's own writer
+    does, so ``hdfs://``, ``s3a://`` and ``file:`` outputs work like
+    local paths."""
+    sc = df.sparkSession.sparkContext
+    Path = sc._jvm.org.apache.hadoop.fs.Path
+    root = Path(path)
+    fs = root.getFileSystem(sc._jsc.hadoopConfiguration())
+    prefix = f"part-b{int(batch_id)}-"
+    for st in fs.globStatus(Path(root, prefix + "*")) or []:
+        fs.delete(st.getPath(), False)
+    staging = Path(root, f"_batch-{int(batch_id)}")
+    df.write.mode("overwrite").parquet(staging.toString())
+    for st in fs.listStatus(staging):
+        name = st.getPath().getName()
+        if name.startswith("part-"):
+            _publish(fs, st.getPath(),
+                     Path(root, prefix + name[len("part-"):]))
+    fs.delete(staging, True)

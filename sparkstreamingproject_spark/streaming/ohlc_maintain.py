@@ -20,8 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..queries.analytics27 import finalize_bars, merge_bars, tick_bars
-from .manifest_commit import (commit_state, manifest_foreach_batch,
-                              read_state)
+from .manifest_commit import commit_state, fold_stream, read_state
 
 
 def merge_ohlc(batch_ticks: DataFrame, table_dir: str,
@@ -62,10 +61,6 @@ def ohlc_stream(tick_stream: DataFrame, table_dir: str,
     """Wire a tick stream (already shaped brand/bar/cents/qty/tick,
     e.g. ``analytics27.lineitem_ticks`` semantics) into the
     manifest-committed bar fold (availableNow)."""
-    fold = manifest_foreach_batch(
-        lambda b, i: merge_ohlc(b, table_dir, i), table_dir)
-    return (tick_stream.writeStream
-            .foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return fold_stream(tick_stream,
+                       lambda b, i: merge_ohlc(b, table_dir, i),
+                       table_dir, checkpoint_dir)

@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..queries.llm20 import PARA_W, chunk_relation, reconstruct_docs
-from .dedup_ingest import _maybe_read, _write
+from .manifest_commit import _maybe_read, _write
 
 _CHUNKS_SCHEMA = "doc_id long, cidx int, chunk string, h string"
 _DOCS_SCHEMA = "doc_id long, n_chunks long"

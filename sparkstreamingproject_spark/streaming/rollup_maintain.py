@@ -24,8 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .manifest_commit import (commit_state, manifest_foreach_batch,
-                              read_state)
+from .manifest_commit import commit_state, fold_stream, read_state
 
 
 def merge_rollup(batch: DataFrame, table_dir: str,
@@ -61,13 +60,6 @@ def maintain_rollup_stream(orders_stream: DataFrame, table_dir: str,
     the batch — so committed batch ids are skipped against the
     manifest's watermark, and the commit itself is the single atomic
     manifest rename (no data-vs-marker window at all)."""
-    fold = manifest_foreach_batch(
-        lambda b, i: merge_rollup(b, table_dir, i), table_dir)
-    writer = (orders_stream.writeStream
-              .foreachBatch(fold)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return fold_stream(orders_stream,
+                       lambda b, i: merge_rollup(b, table_dir, i),
+                       table_dir, checkpoint_dir, trigger_seconds)

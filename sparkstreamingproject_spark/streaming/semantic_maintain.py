@@ -72,8 +72,8 @@ from ..llm.similarity import (cosine_similarity, kmeans_assign,
                               kmeans_centroids)
 from ..queries.llm15 import (SEM_ITER, SEM_K, SEM_TARGET, SEM_THRESHOLD,
                              semantic_keep_labels)
-from .dedup_ingest import _maybe_read, _write
-from .manifest_commit import _manifest_path, commit_version, state_path
+from .manifest_commit import (_manifest_path, _maybe_read, _write,
+                              commit_version, state_path)
 
 _ASSIGNED_SCHEMA = ("vec_id long, v array<double>, cell long, "
                     "centroid_sim double")
@@ -99,10 +99,7 @@ def init_semantic_state(train: DataFrame, state_dir: str, k: int,
     re-train compaction. Refuses to run once a manifest exists:
     writing through ``_resolve`` then would mutate a committed
     'immutable' version dir in place — re-training an existing state
-    is exactly what ``refresh_semantic_state`` is for. The check reads
-    the manifest path directly (NOT ``state_path``, whose
-    ``manifest_info`` may ADOPT a legacy layout as a side effect — a
-    refusal guard must not mutate disk before refusing)."""
+    is exactly what ``refresh_semantic_state`` is for."""
     if os.path.exists(_manifest_path(state_dir)):
         raise RuntimeError(
             f"semantic state at {state_dir!r} already has a committed "
@@ -215,7 +212,7 @@ def refresh_semantic_state(spark, state_dir: str,
     retention contract. The NEXT refresh retires it below (this
     module owns the tree layout, so the cleanup lives here, not in
     the generic ``manifest_commit._gc``, which cannot tell a
-    superseded tree state from foreign data adoption declined) —
+    superseded tree state from foreign data) —
     closing the unbounded-orphan leak (ADVICE r13) without shrinking
     the grace window."""
     if state_path(state_dir) is not None and os.path.isdir(state_dir):

@@ -47,8 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .manifest_commit import (commit_state, manifest_foreach_batch,
-                              read_state)
+from .manifest_commit import commit_state, fold_stream, read_state
 
 #: session gap — 30 minutes in microseconds (events_gap_sessionize's
 #: 1800000000; a NEW session starts when the gap is strictly greater)
@@ -186,14 +185,6 @@ def maintain_sessions_stream(events_stream: DataFrame, table_dir: str,
     batch ids skip against the manifest watermark and the commit is
     the single atomic manifest rename (``manifest_commit.py``).
     Expects columns (user_id, event_id, us)."""
-    fold = manifest_foreach_batch(
-        lambda bdf, i: merge_sessions(bdf, table_dir, gap_us, i),
-        table_dir)
-    writer = (events_stream.writeStream
-              .foreachBatch(fold)
-              .option("checkpointLocation", checkpoint_dir))
-    if trigger_seconds is None:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-    return writer.start()
+    return fold_stream(
+        events_stream, lambda b, i: merge_sessions(b, table_dir, gap_us, i),
+        table_dir, checkpoint_dir, trigger_seconds)

@@ -3,18 +3,24 @@
 Two strategies, both correct; choice is a throughput call:
 
 1. ``split_log_stream_to_sinks`` — one ``foreachBatch`` that persists
-   the micro-batch once and appends the five filtered projections
+   the micro-batch once and writes the five filtered projections
    concurrently. This is the direct analog of the reference's
    single-pass routing loop; the ``persist()`` plays the role of its
-   shared iterator. Five sinks, one source scan per batch. Each append
+   shared iterator. Five sinks, one source scan per batch. Each write
    is a one-task job whose cost is mostly driver-side analysis,
-   planning, job setup and commit, so five sequential appends kept the
+   planning, job setup and commit, so five sequential writes kept the
    cores idle for most of the batch; submitted together their driver
    phases overlap. On a 4-vCPU host the ``ods_log`` benchmark's drain
    interval per batch (``wall_s``) fell from 1.22 s to 0.91 s (medians
    of 11 alternating runs each); in one traced run each, the
    ``foreachBatch`` call (``streaming.batch_s``) fell from 0.92 s to
    0.50 s, still five one-task jobs a batch.
+
+   Replays are safe: Structured Streaming re-delivers an uncommitted
+   micro-batch under the same id, and each topic's write
+   (``manifest_commit.write_batch_files``) replaces that batch id's
+   ``part-b<id>-*`` files instead of appending a second copy. Each
+   ``<out>/<topic>`` stays one flat parquet directory.
 
 2. ``tagged_split_writer`` — tag every record with its stream label and
    write ONE partitioned sink (``partitionBy(topic)``); downstream
@@ -36,27 +42,32 @@ from pyspark.sql import functions as F
 from ..operators.routing import (
     TOPIC_ERROR, TOPIC_PAGE, TOPIC_START, split_log_streams,
 )
+from .manifest_commit import write_batch_files
 
 
 def write_split_batch(batch: DataFrame, batch_id: int, out_dir: str) -> None:
-    """One micro-batch → five parquet table appends, run concurrently.
+    """One micro-batch → five parquet tables, written concurrently.
 
     Persist once so the five filtered writes share the parsed batch (the
-    reference walks its iterator once for the same reason). Each worker
+    reference walks its iterator once for the same reason). Each topic
+    gets this batch's ``part-b<batch_id>-*`` files in ``out_dir/<topic>``
+    (``write_batch_files``), so calling again with the same batch id —
+    a replay — replaces them rather than duplicating rows. Each worker
     thread takes a copy of the caller's local properties (job group,
     streaming query id, SQL execution id) and session tags, so its jobs
-    belong to this micro-batch. All five appends finish before the first
-    failure, in topic order, is raised and the batch unpersisted."""
+    belong to this micro-batch. All five writes finish before the first
+    failure, in topic order, is raised and the batch unpersisted; a
+    replay then rewrites every topic, the failed one included."""
     batch.persist()
     try:
         outputs = split_log_streams(batch)
         session = batch.sparkSession
         with ThreadPoolExecutor(len(outputs)) as pool:
             # one wrapper per worker, so each thread gets its own copy of
-            # the properties its append sets its SQL execution id in
+            # the properties its write sets its SQL execution id in
             futures = [
                 pool.submit(inheritable_thread_target(session)(
-                    df.write.mode("append").parquet), f"{out_dir}/{topic}")
+                    write_batch_files), df, f"{out_dir}/{topic}", batch_id)
                 for topic, df in outputs.items()]
         for f in futures:
             f.result()
@@ -76,8 +87,9 @@ def split_log_stream_to_sinks(env_stream: DataFrame, out_dir: str,
                               checkpoint: str, trigger_seconds: int | None = 5):
     """Strategy 1: foreachBatch multi-sink (exactly the reference's
     topology, with offsets/commit handled by the checkpoint). Each
-    micro-batch's five appends run concurrently, in jobs that carry the
-    batch's job group (``write_split_batch``)."""
+    micro-batch's five writes run concurrently, in jobs that carry the
+    batch's job group, and a replayed batch replaces its own files
+    (``write_split_batch``)."""
     writer = (env_stream.writeStream
               .foreachBatch(lambda b, i: write_split_batch(b, i, out_dir))
               .option("checkpointLocation", checkpoint))

@@ -26,8 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .manifest_commit import (commit_state, manifest_foreach_batch,
-                              read_state)
+from .manifest_commit import commit_state, fold_stream, read_state
 
 
 def batch_counts(batch: DataFrame, key_col: str = "event_type") -> DataFrame:
@@ -68,10 +67,6 @@ def trending_stream(events_stream: DataFrame, table_dir: str,
                     checkpoint_dir: str, key_col: str = "event_type"):
     """Wire an event stream into the manifest-committed decayed fold
     (availableNow)."""
-    fold = manifest_foreach_batch(
-        lambda b, i: merge_trending(b, table_dir, key_col, i), table_dir)
-    return (events_stream.writeStream
-            .foreachBatch(fold)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start())
+    return fold_stream(
+        events_stream, lambda b, i: merge_trending(b, table_dir, key_col, i),
+        table_dir, checkpoint_dir)

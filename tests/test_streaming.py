@@ -29,7 +29,10 @@ from sparkstreamingproject_spark.operators.routing import (
 from sparkstreamingproject_spark.schemas import CDC_ENVELOPE_SCHEMA, LOG_ENVELOPE_SCHEMA
 from sparkstreamingproject_spark.sources.streams import file_stream
 from sparkstreamingproject_spark.streaming.cdc_router import route_cdc_stream
-from sparkstreamingproject_spark.streaming.dim_upsert import upsert_dim_parquet
+from sparkstreamingproject_spark.streaming.dim_upsert import (
+    read_dim, upsert_dim_parquet,
+)
+from sparkstreamingproject_spark.streaming.manifest_commit import read_state
 from sparkstreamingproject_spark.streaming.split import (
     split_log_stream_to_sinks, tagged_split_writer, write_split_batch,
 )
@@ -209,6 +212,86 @@ def test_write_split_batch_jobs_keep_caller_job_group(spark, tmp_path):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) >= 5
 
 
+def test_write_split_batch_replay_keeps_one_copy(spark, tmp_path):
+    """Structured Streaming re-delivers an uncommitted micro-batch under
+    the same id: writing batch 7 twice must leave one copy of each
+    topic, in a flat directory, and batch 8 must still add its own."""
+    import os
+
+    env = log_envelope_df(spark, n=200)
+    out = str(tmp_path / "out")
+    write_split_batch(env, 7, out)
+    write_split_batch(env, 7, out)
+    wants = split_log_streams(env)
+    for topic, want in wants.items():
+        got = spark.read.parquet(f"{out}/{topic}")
+        assert _count_and_hash(got) == _count_and_hash(want), topic
+        entries = [e for e in os.listdir(f"{out}/{topic}")
+                   if not e.startswith(".")]  # Hadoop's .crc side files
+        assert entries and all(e.startswith("part-b7-") for e in entries), \
+            entries  # flat: no staging dir or partition dir left behind
+    write_split_batch(env, 8, out)
+    n = wants[TOPIC_PAGE].count()
+    assert spark.read.parquet(f"{out}/{TOPIC_PAGE}").count() == 2 * n
+
+
+def test_write_split_batch_failed_topic_then_replay(spark, tmp_path,
+                                                    monkeypatch):
+    """A batch whose error-topic publish fails after the other four
+    topics were written: the replay must leave every topic with
+    exactly one copy of the batch (count and xxhash64 sum)."""
+    from sparkstreamingproject_spark.streaming import manifest_commit
+
+    env = log_envelope_df(spark, n=200)
+    out = str(tmp_path / "out")
+    real = manifest_commit._publish
+
+    def failing(fs, src, dst):
+        if f"/{TOPIC_ERROR}/" in dst.toString():
+            raise OSError("injected publish failure")
+        return real(fs, src, dst)
+
+    monkeypatch.setattr(manifest_commit, "_publish", failing)
+    with pytest.raises(OSError, match="injected"):
+        write_split_batch(env, 3, out)
+    monkeypatch.undo()
+    assert spark.read.parquet(f"{out}/{TOPIC_PAGE}").count() > 0
+    write_split_batch(env, 3, out)  # the engine's replay
+    for topic, want in split_log_streams(env).items():
+        got = spark.read.parquet(f"{out}/{topic}")
+        assert _count_and_hash(got) == _count_and_hash(want), topic
+
+
+def test_write_split_batch_to_file_uri(spark, tmp_path):
+    """The split publishes through the output path's Hadoop
+    FileSystem, so a URI output (here ``file:``, as for ``hdfs://`` or
+    ``s3a://``) works like a local path, replays included."""
+    env = log_envelope_df(spark, n=200)
+    out = (tmp_path / "out").as_uri()
+    write_split_batch(env, 4, out)
+    write_split_batch(env, 4, out)
+    for topic, want in split_log_streams(env).items():
+        got = spark.read.parquet(f"{out}/{topic}")
+        assert _count_and_hash(got) == _count_and_hash(want), topic
+    assert not (tmp_path / "out" / TOPIC_PAGE / "_batch-4").exists()
+
+
+def test_streaming_renames_live_in_the_commit_modules():
+    """Every rename that publishes streaming output belongs to one of
+    the commit protocols: ``manifest_commit`` or compaction's private
+    rename-aside swap. A rename anywhere else in ``streaming/`` is a
+    commit protocol of its own."""
+    import pathlib
+    import re
+
+    import sparkstreamingproject_spark.streaming as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    renaming = {p.name for p in root.glob("*.py")
+                if re.search(r"\bos\.(rename|replace)\(", p.read_text())}
+    assert renaming <= {"manifest_commit.py", "compaction.py"}, renaming
+
+
 @pytest.mark.slow
 def test_cdc_router_facts_and_dims(spark, tmp_path):
     src = str(tmp_path / "cdc_land")
@@ -255,7 +338,7 @@ def test_dim_upsert_lww_across_batches(spark, tmp_path):
         "id string, name string, ts long")
     upsert_dim_parquet(b1, table_dir, ["id"], "ts")
     upsert_dim_parquet(b2, table_dir, ["id"], "ts")
-    got = {r["id"]: (r["name"], r["ts"]) for r in spark.read.parquet(table_dir).collect()}
+    got = {r["id"]: (r["name"], r["ts"]) for r in read_dim(spark, table_dir).collect()}
     assert got == {"1": ("alice2", 200), "2": ("bob", 100), "3": ("carol", 150)}
 
 
@@ -294,29 +377,6 @@ def test_windowed_stream_matches_batch(spark, tmp_path):
     # (watermark = max event time - 1h ⇒ up to 2 open windows withheld)
     assert got.count() >= batch.count() - 2
     assert got.count() >= 1
-
-
-def test_idempotent_foreach_batch_skips_replay(spark, tmp_path):
-    """Replaying a committed batch_id must not double-write; an
-    uncommitted batch_id must write."""
-    from sparkstreamingproject_spark.streaming.idempotent import (
-        idempotent_foreach_batch,
-    )
-    out = str(tmp_path / "sink")
-    markers = str(tmp_path / "markers")
-    writes = []
-
-    def write(batch_df, batch_id):
-        writes.append(batch_id)
-        batch_df.write.mode("append").parquet(out)
-
-    wrapped = idempotent_foreach_batch(write, markers)
-    df = spark.range(100)
-    wrapped(df, 0)          # first attempt: writes
-    wrapped(df, 0)          # crash-replay of committed batch: skipped
-    wrapped(df, 1)          # next batch: writes
-    assert writes == [0, 1]
-    assert spark.read.parquet(out).count() == 200
 
 
 @pytest.mark.slow
@@ -437,7 +497,7 @@ def test_scd2_upsert_matches_batch_with_late_data(spark, tmp_path):
     d = str(tmp_path / "scd2_dim")
     upsert_scd2_parquet(mk(b1), d, "uid", "ts", ["attr"])
     upsert_scd2_parquet(mk(b2), d, "uid", "ts", ["attr"])
-    got = spark.read.parquet(d)
+    got = read_dim(spark, d)
 
     allrows = mk(b1).unionByName(mk(b2)).dropDuplicates(["uid", "ts", "attr"])
     want = scd2_history(allrows, "uid", "ts", ["attr"])
@@ -471,7 +531,7 @@ def test_scd2_stream_wrapper_drains_landing(spark, tmp_path):
     second.coalesce(1).write.mode("append").parquet(land)
     scd2_stream(file_stream(spark, land, df.schema), d, ck,
                 "uid", "ts", ["attr"]).awaitTermination(120)
-    got = spark.read.parquet(d)
+    got = read_dim(spark, d)
     want = scd2_history(df, "uid", "ts", ["attr"])
     assert sorted(map(tuple, got.select(*want.columns).collect())) \
         == sorted(map(tuple, want.collect()))
@@ -593,7 +653,7 @@ def test_hll_rollup_stream_equals_batch(spark, tmp_path, sf_dir):
     q = hll_rollup_stream(stream, regs_dir, str(tmp_path / "ck_hll"))
     q.awaitTermination(180)
 
-    maintained = spark.read.parquet(regs_dir)
+    maintained = read_state(spark, regs_dir)
     direct = day_user_registers(events)
     got = {(r.day, r.bucket): r.m for r in maintained.collect()}
     exp = {(r.day, r.bucket): r.m for r in direct.collect()}
@@ -767,56 +827,97 @@ def test_manifest_crash_before_commit_preserves_rollup_state(
     assert "rollup.manifest" in left, left
 
 
-def test_swap_in_recovery_adopts_orphans_for_dim_upsert(
-        spark, tmp_path, monkeypatch):
-    """Same crash window through the dim-LWW caller, plus tmp/old
-    debris cleanup: a stale .tmp from a crashed write and a leftover
-    .old from a completed swap are both removed, and the .old of an
-    interrupted swap is adopted as the table."""
+def _replaced_state_fold(spark, fold):
+    """``(merge(df, table_dir, batch_id), batch 0, batch 1)`` for one
+    of the folds that replace their state each batch."""
+    from datetime import datetime, timezone
+
+    from sparkstreamingproject_spark.streaming.dim_upsert import (
+        upsert_scd2_parquet)
+    from sparkstreamingproject_spark.streaming.hll_maintain import (
+        merge_hll_registers)
+    from sparkstreamingproject_spark.streaming.kmv_maintain import (
+        merge_kmv_bottomk)
+    from sparkstreamingproject_spark.streaming.retention_maintain import (
+        merge_bitmaps)
+
+    t1 = datetime(2024, 1, 1, 10, tzinfo=timezone.utc)
+    t2 = datetime(2024, 1, 2, 10, tzinfo=timezone.utc)
+    df = spark.createDataFrame
+    if fold == "dim_lww":
+        sch = "k long, v string, ver long"
+        return (lambda b, t, i: upsert_dim_parquet(b, t, ["k"], "ver", i),
+                df([(1, "a", 1), (2, "b", 1)], sch),
+                df([(1, "a2", 2), (3, "c", 1)], sch))
+    if fold == "scd2":
+        sch = "k long, ts timestamp, v string"
+        return (lambda b, t, i: upsert_scd2_parquet(b, t, "k", "ts", ["v"],
+                                                    batch_id=i),
+                df([(1, t1, "a"), (2, t1, "x")], sch),
+                df([(1, t2, "b")], sch))
+    if fold == "hll":
+        sch = "user_id long, ts timestamp"
+        return (merge_hll_registers,
+                df([(i, t1) for i in range(40)], sch),
+                df([(i, t2) for i in range(20, 60)], sch))
+    if fold == "kmv":
+        sch = "user_id long, event_type string"
+        return (lambda b, t, i: merge_kmv_bottomk(b, t, 8, i),
+                df([(i, "view") for i in range(30)], sch),
+                df([(i, "view") for i in range(20, 50)]
+                   + [(i, "purchase") for i in range(10)], sch))
+    sch = "user_id long, ts timestamp"
+    return (merge_bitmaps,
+            df([(i, t1) for i in range(100)], sch),
+            df([(i, t2) for i in range(50, 150)] + [(7, t1)], sch))
+
+
+@pytest.mark.parametrize(
+    "fold", ["dim_lww", "scd2", "hll", "kmv", "retention_bitmap"])
+def test_manifest_crash_drill_replaced_state_folds(spark, tmp_path,
+                                                   monkeypatch, fold):
+    """The crash drill of the rollup fold, for the five folds that
+    replace their state each batch: batch 1's new version is written
+    but the manifest replace dies. The crashed merge is invisible
+    (state and watermark equal batch 0's commit), and replaying batch 1
+    gives exactly the state of an uncrashed run."""
     import os as _os
-    import shutil as _shutil
 
-    from sparkstreamingproject_spark.streaming import statestore
+    from sparkstreamingproject_spark.streaming import manifest_commit
 
-    table = str(tmp_path / "dim")
-    sch = "k long, v string, ver long"
-    b1 = spark.createDataFrame([(1, "a", 1), (2, "b", 1)], sch)
-    b2 = spark.createDataFrame([(1, "a2", 2), (3, "c", 1)], sch)
-    upsert_dim_parquet(b1, table, ["k"], "ver")
+    merge, b0, b1 = _replaced_state_fold(spark, fold)
 
-    # stale tmp from a write that died mid-flight → cleaned on read
-    _os.makedirs(table + ".tmp-deadbeef")
-    assert statestore.table_exists(table)
-    assert not _os.path.isdir(table + ".tmp-deadbeef")
+    def state(table):
+        return sorted(map(tuple, read_state(spark, table).collect()),
+                      key=repr)
 
-    real_rename = _os.rename
-    calls = {"n": 0}
+    ref = str(tmp_path / "ref")
+    merge(b0, ref, 0)
+    before = state(ref)
+    merge(b1, ref, 1)
+    want = state(ref)
+    assert want != before
 
-    def flaky(src, dst):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise OSError("injected")
-        real_rename(src, dst)
+    table = str(tmp_path / "state")
+    merge(b0, table, 0)
 
-    monkeypatch.setattr(statestore.os, "rename", flaky)
+    def crashing(src, dst):
+        raise OSError("injected crash before manifest commit")
+
+    monkeypatch.setattr(manifest_commit.os, "replace", crashing)
     with pytest.raises(OSError, match="injected"):
-        upsert_dim_parquet(b2, table, ["k"], "ver")
-    monkeypatch.setattr(statestore.os, "rename", real_rename)
-    assert not _os.path.isdir(table)
+        merge(b1, table, 1)
+    monkeypatch.undo()
+    assert manifest_commit.manifest_info(table)[1] == 0
+    assert state(table) == before
 
-    upsert_dim_parquet(b2, table, ["k"], "ver")  # replay
-    got = {r.k: (r.v, r.ver) for r in spark.read.parquet(table).collect()}
-    assert got == {1: ("a2", 2), 2: ("b", 1), 3: ("c", 1)}
-
-    # a leftover .old of a COMPLETED swap (crash after rename-in,
-    # before the delete) must be discarded, never adopted over the
-    # newer table
-    _shutil.copytree(table, table + ".old-feedface")
-    upsert_dim_parquet(
-        spark.createDataFrame([(2, "b2", 2)], sch), table, ["k"], "ver")
-    assert not _os.path.isdir(table + ".old-feedface")
-    got = {r.k: (r.v, r.ver) for r in spark.read.parquet(table).collect()}
-    assert got == {1: ("a2", 2), 2: ("b2", 2), 3: ("c", 1)}
+    merge(b1, table, 1)  # foreachBatch replay of the uncommitted batch
+    assert manifest_commit.manifest_info(table)[1] == 1
+    assert state(table) == want
+    # the crashed attempt's orphan version is gone; the committed
+    # version and its predecessor remain
+    assert len([d for d in _os.listdir(str(tmp_path))
+                if d.startswith("state.v-")]) == 2
 
 
 def test_dedup_ingest_batch_retry_is_idempotent(spark, tmp_path):
@@ -855,75 +956,6 @@ def test_dedup_ingest_batch_retry_is_idempotent(spark, tmp_path):
     assert got_b == exp_b
     n_h = spark.read.parquet(f"{idx}/content_hash").select("h").distinct().count()
     assert spark.read.parquet(f"{idx}/content_hash").count() == 3 == n_h
-
-
-def test_swap_in_crash_recovery_hll_and_scd2(spark, tmp_path, monkeypatch):
-    """Generalize the crash-window coverage across the remaining two
-    _swap_in callers (VERDICT r06 §next 6a): HLL register max-merge
-    and SCD2 history rebuild both survive a crash injected between the
-    rename-aside and rename-in, replay included."""
-    import os as _os
-
-    from sparkstreamingproject_spark.streaming import statestore
-    from sparkstreamingproject_spark.streaming.dim_upsert import (
-        upsert_scd2_parquet)
-    from sparkstreamingproject_spark.streaming.hll_maintain import (
-        day_user_registers, merge_hll_registers)
-
-    def crash_second_rename():
-        real = _os.rename
-        calls = {"n": 0}
-
-        def flaky(src, dst):
-            calls["n"] += 1
-            if calls["n"] == 2:
-                raise OSError("injected")
-            real(src, dst)
-        return flaky, real
-
-    # --- HLL registers ---
-    from datetime import datetime, timezone
-    hll = str(tmp_path / "hll")
-    sch = "user_id long, ts timestamp"
-    t1 = datetime(2024, 1, 1, 10, tzinfo=timezone.utc)
-    t2 = datetime(2024, 1, 2, 10, tzinfo=timezone.utc)
-    b1 = spark.createDataFrame([(i, t1) for i in range(40)], sch)
-    b2 = spark.createDataFrame([(i, t2) for i in range(20, 60)], sch)
-    merge_hll_registers(b1, hll)
-    flaky, real = crash_second_rename()
-    monkeypatch.setattr(statestore.os, "rename", flaky)
-    with pytest.raises(OSError, match="injected"):
-        merge_hll_registers(b2, hll)
-    monkeypatch.setattr(statestore.os, "rename", real)
-    assert not _os.path.isdir(hll)
-    merge_hll_registers(b2, hll)  # replay
-    got = {(r.day, r.bucket): r.m
-           for r in spark.read.parquet(hll).collect()}
-    exp = {(r.day, r.bucket): r.m
-           for r in day_user_registers(b1.unionByName(b2)).collect()}
-    assert got == exp  # registers byte-identical to batch recompute
-
-    # --- SCD2 history ---
-    scd = str(tmp_path / "scd2")
-    csch = "k long, ts timestamp, v string"
-    d1 = datetime(2024, 1, 1, tzinfo=timezone.utc)
-    d2 = datetime(2024, 2, 1, tzinfo=timezone.utc)
-    c1 = spark.createDataFrame([(1, d1, "a"), (2, d1, "x")], csch)
-    c2 = spark.createDataFrame([(1, d2, "b")], csch)
-    upsert_scd2_parquet(c1, scd, "k", "ts", ["v"])
-    flaky, real = crash_second_rename()
-    monkeypatch.setattr(statestore.os, "rename", flaky)
-    with pytest.raises(OSError, match="injected"):
-        upsert_scd2_parquet(c2, scd, "k", "ts", ["v"])
-    monkeypatch.setattr(statestore.os, "rename", real)
-    assert not _os.path.isdir(scd)
-    upsert_scd2_parquet(c2, scd, "k", "ts", ["v"])  # replay
-    hist = spark.read.parquet(scd)
-    rows = {(r.k, r.v): (r.valid_from_us, r.valid_to_us)
-            for r in hist.collect()}
-    # key 1 has two tiled versions; key 2 (untouched by batch 2) survived
-    assert set(rows) == {(1, "a"), (1, "b"), (2, "x")}
-    assert rows[(1, "a")][1] == rows[(1, "b")][0]  # tiling repaired
 
 
 def test_rollup_stream_fold_is_batchid_idempotent(spark, tmp_path):
@@ -1376,6 +1408,48 @@ def test_compaction_preserves_ingest_semantics(spark, tmp_path):
     assert n_files(corp_b) == 1
 
 
+def test_compaction_crash_mid_swap_recovers(spark, tmp_path, monkeypatch):
+    """Compaction's rename-aside swap dies between renaming the table
+    aside and renaming the compacted one in: the table is missing and
+    an ``.old-*`` holds it. The next compaction renames it back,
+    compacts, and leaves no ``.old-*``/``.tmp-*`` debris; the relation
+    is the same throughout."""
+    import os
+
+    from sparkstreamingproject_spark.streaming import compaction
+    from sparkstreamingproject_spark.streaming.manifest_commit import _write
+
+    table = str(tmp_path / "t")
+    for bid in range(3):
+        _write(spark.createDataFrame([(bid, f"r{bid}")], "id long, v string"),
+               table, bid)
+
+    def rel():
+        return sorted(map(tuple, spark.read.parquet(table)
+                          .select("id", "v").collect()))
+
+    want = rel()
+    real, n = os.rename, {"renames": 0}
+
+    def crashing(src, dst):
+        n["renames"] += 1
+        if n["renames"] == 2:  # the rename-in of the compacted table
+            raise OSError("injected crash mid-swap")
+        return real(src, dst)
+
+    monkeypatch.setattr(compaction.os, "rename", crashing)
+    with pytest.raises(OSError, match="injected"):
+        compaction.compact_batched_output(spark, table, keep_last=1)
+    monkeypatch.undo()
+    left = os.listdir(tmp_path)
+    assert "t" not in left and any(d.startswith("t.old-") for d in left)
+
+    stats = compaction.compact_batched_output(spark, table, keep_last=1)
+    assert stats == {"folded": 2, "kept": 1, "rows": 3}
+    assert rel() == want
+    assert os.listdir(tmp_path) == ["t"]
+
+
 def test_compaction_preserves_ivf_postings_and_cell_layout(spark, tmp_path):
     """Compacting the IVF posting lists must preserve (a) the probe
     results exactly and (b) the nested cell= partition dirs that probe
@@ -1515,15 +1589,17 @@ def test_kmv_bottomk_stream_equals_batch_and_replay_noop(
     q.awaitTermination(180)
 
     got = {(r.event_type, r.h)
-           for r in spark.read.parquet(sk_dir).collect()}
+           for r in read_state(spark, sk_dir).collect()}
     exp = {(r.event_type, r.h)
            for r in _bottom_k(type_user_hashes(events), k).collect()}
     assert got == exp and len(got) > 0
 
     # replay the ENTIRE input as one more "batch": state must not move
-    merge_kmv_bottomk(events, sk_dir, k)
+    from sparkstreamingproject_spark.streaming.manifest_commit import (
+        manifest_info)
+    merge_kmv_bottomk(events, sk_dir, k, manifest_info(sk_dir)[1] + 1)
     again = {(r.event_type, r.h)
-             for r in spark.read.parquet(sk_dir).collect()}
+             for r in read_state(spark, sk_dir).collect()}
     assert again == got
 
     # estimator sanity: every type saturated its sketch (n_kept == k)
@@ -1534,7 +1610,7 @@ def test_kmv_bottomk_stream_equals_batch_and_replay_noop(
              .agg(F.countDistinct("user_id").alias("n")).collect()}
     est = {r.event_type: (r.n_kept, r.kmv_est) for r in
            estimate_distinct_by_type(
-               spark.read.parquet(sk_dir), k).collect()}
+               read_state(spark, sk_dir), k).collect()}
     assert set(est) == set(exact)
     for t, n in exact.items():
         n_kept, e = est[t]
@@ -1543,51 +1619,6 @@ def test_kmv_bottomk_stream_equals_batch_and_replay_noop(
             assert abs(e - n) <= 0.75 * n, (t, e, n)
         else:
             assert (n_kept, e) == (n, float(n))
-
-
-def test_swap_in_crash_recovery_kmv(spark, tmp_path, monkeypatch):
-    """The KMV bottom-k fold must survive a crash between the two
-    swap renames: state recovered from the .old-* aside, the replayed
-    batch re-merges, and the final sketch equals the batch sketch —
-    same protocol as the HLL/SCD2 crash test, for the fifth fold."""
-    import os as _os
-
-    from sparkstreamingproject_spark.streaming import statestore
-    from sparkstreamingproject_spark.streaming.kmv_maintain import (
-        _bottom_k, merge_kmv_bottomk, type_user_hashes)
-
-    k = 8
-    sch = "user_id long, event_type string"
-    b1 = spark.createDataFrame(
-        [(i, "view") for i in range(30)], sch)
-    b2 = spark.createDataFrame(
-        [(i, "view") for i in range(20, 50)]
-        + [(i, "purchase") for i in range(10)], sch)
-    kmv = str(tmp_path / "kmv")
-    merge_kmv_bottomk(b1, kmv, k)
-
-    real = _os.rename
-    calls = {"n": 0}
-
-    def flaky(src, dst):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise OSError("injected")
-        real(src, dst)
-
-    monkeypatch.setattr(statestore.os, "rename", flaky)
-    with pytest.raises(OSError, match="injected"):
-        merge_kmv_bottomk(b2, kmv, k)
-    monkeypatch.setattr(statestore.os, "rename", real)
-    assert not _os.path.isdir(kmv)  # mid-swap layout, not a live table
-
-    merge_kmv_bottomk(b2, kmv, k)  # replay
-    got = {(r.event_type, r.h)
-           for r in spark.read.parquet(kmv).collect()}
-    exp = {(r.event_type, r.h)
-           for r in _bottom_k(type_user_hashes(b1.unionByName(b2)),
-                              k).collect()}
-    assert got == exp
 
 
 def test_manifest_crash_recovery_ohlc(spark, tmp_path, monkeypatch):
@@ -1881,7 +1912,7 @@ def test_trending_stream_equals_batched_folds(spark, tmp_path):
 @pytest.mark.slow
 def test_cdc_end_to_end_effectively_once(spark, tmp_path, monkeypatch):
     """VERDICT r08 §next 6 — the full CDC app path (apps/ods_base_db →
-    route_cdc_stream → idempotent markers) under an injected MID-BATCH
+    route_cdc_stream → manifest commit) under an injected MID-BATCH
     crash + engine replay: facts are already on disk and the first dim
     table already upserted when the second dim upsert dies, the query
     fails, and the restarted query replays the same micro-batch.
@@ -2133,7 +2164,7 @@ def test_retention_bitmap_stream_equals_batch(spark, tmp_path, sf_dir):
     q.awaitTermination(180)
 
     got_bits = {(r.day, r.w): r.bits
-                for r in spark.read.parquet(idx_dir).collect()}
+                for r in read_state(spark, idx_dir).collect()}
     exp_bits = {(r.day, r.w): r.bits
                 for r in day_word_bitmaps(events).collect()}
     assert got_bits == exp_bits  # index byte-identical, not just rates
@@ -2144,54 +2175,6 @@ def test_retention_bitmap_stream_equals_batch(spark, tmp_path, sf_dir):
            for r in REGISTRY["events_retention_bitmap_index"]
            .fn(spark, sf_dir).collect()}
     assert got == exp and len(got) > 0
-
-
-def test_swap_in_crash_recovery_retention_bitmap(spark, tmp_path,
-                                                 monkeypatch):
-    """Crash-replay drill for the retention-bitmap fold: a crash
-    injected between the rename-aside and rename-in leaves the old
-    index readable; the replayed batch re-ORs to bits identical to a
-    batch recompute (bit_or idempotence — no dupes, no loss)."""
-    import os as _os
-    from datetime import datetime, timezone
-
-    from sparkstreamingproject_spark.queries.analytics29 import (
-        day_word_bitmaps)
-    from sparkstreamingproject_spark.streaming import statestore
-    from sparkstreamingproject_spark.streaming.retention_maintain import (
-        merge_bitmaps)
-
-    sch = "user_id long, ts timestamp"
-    t1 = datetime(2024, 1, 1, 10, tzinfo=timezone.utc)
-    t2 = datetime(2024, 1, 2, 10, tzinfo=timezone.utc)
-    b1 = spark.createDataFrame([(i, t1) for i in range(100)], sch)
-    b2 = spark.createDataFrame(
-        [(i, t2) for i in range(50, 150)] + [(7, t1)], sch)
-
-    idx = str(tmp_path / "bm")
-    merge_bitmaps(b1, idx)
-
-    real = _os.rename
-    calls = {"n": 0}
-
-    def flaky(src, dst):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise OSError("injected")
-        real(src, dst)
-
-    monkeypatch.setattr(statestore.os, "rename", flaky)
-    with pytest.raises(OSError, match="injected"):
-        merge_bitmaps(b2, idx)
-    monkeypatch.setattr(statestore.os, "rename", real)
-    assert not _os.path.isdir(idx)  # old state renamed aside, no torn dir
-
-    merge_bitmaps(b2, idx)  # replay
-    merge_bitmaps(b2, idx)  # double replay: idempotent, bits unchanged
-    got = {(r.day, r.w): r.bits for r in spark.read.parquet(idx).collect()}
-    exp = {(r.day, r.w): r.bits
-           for r in day_word_bitmaps(b1.unionByName(b2)).collect()}
-    assert got == exp
 
 
 @pytest.mark.slow
@@ -2375,7 +2358,7 @@ def test_kll_sketch_stream_equals_batch_and_replay(spark, tmp_path,
     converges."""
     from sparkstreamingproject_spark.queries import REGISTRY
     from sparkstreamingproject_spark.sources.streams import file_stream
-    from sparkstreamingproject_spark.streaming.dedup_ingest import _write
+    from sparkstreamingproject_spark.streaming.manifest_commit import _write
     from sparkstreamingproject_spark.streaming.kll_maintain import (
         fold_kll_sample, kll_quantiles_from_state, kll_stream)
 
@@ -2439,7 +2422,7 @@ def test_bm25_index_stream_equals_batch_and_replay(spark, tmp_path,
     from sparkstreamingproject_spark.streaming.bm25_maintain import (
         bm25_index_stream, doc_index_rows, fold_bm25_index,
         search_bm25_index)
-    from sparkstreamingproject_spark.streaming.dedup_ingest import _write
+    from sparkstreamingproject_spark.streaming.manifest_commit import _write
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
         .select("doc_id", "text")
@@ -2521,7 +2504,7 @@ def test_semantic_cells_stream_equals_batch_and_replay(spark, tmp_path,
     from sparkstreamingproject_spark.queries import REGISTRY
     from sparkstreamingproject_spark.queries.llm15 import SEM_K
     from sparkstreamingproject_spark.sources.streams import file_stream
-    from sparkstreamingproject_spark.streaming.dedup_ingest import _write
+    from sparkstreamingproject_spark.streaming.manifest_commit import _write
     from sparkstreamingproject_spark.streaming.semantic_maintain import (
         fold_semantic_cells, init_semantic_state,
         semantic_cells_stream, semantic_dedup_from_state)
@@ -2620,37 +2603,6 @@ def test_semantic_cells_stream_equals_batch_at_scaled_k(spark, tmp_path,
 # manifest_commit hardening drills (ADVICE r12 items 1-4)
 
 
-def test_manifest_adopts_legacy_swap_in_layout(spark, tmp_path):
-    """Upgrading a fold from the swap_in layout (state parquet at
-    table_dir itself) to manifest-last must ADOPT the legacy state as
-    the initial version, not silently reset to empty while the old
-    data sits orphaned (ADVICE r12 item 1)."""
-    from sparkstreamingproject_spark.streaming import manifest_commit
-    from sparkstreamingproject_spark.streaming.rollup_maintain import (
-        merge_rollup)
-
-    table = str(tmp_path / "rollup")
-    sch = "o_orderdate string, o_totalprice double"
-    legacy = spark.createDataFrame(
-        [("1995-01-01", 1000, 1), ("1995-01-02", 500, 1)],
-        "day string, cents long, n long")
-    legacy.coalesce(1).write.parquet(table)  # the old layout
-
-    # first touch adopts: manifest names the legacy data, watermark -1
-    token, wm = manifest_commit.manifest_info(table)
-    assert token and token.startswith("legacy-") and wm == -1
-    got = {str(r.day): (r.cents, r.n)
-           for r in manifest_commit.read_state(spark, table).collect()}
-    assert got == {"1995-01-01": (1000, 1), "1995-01-02": (500, 1)}
-
-    # a post-upgrade merge folds ON TOP of the adopted state
-    merge_rollup(spark.createDataFrame([("1995-01-01", 2.5)], sch),
-                 table, batch_id=0)
-    got = {str(r.day): (r.cents, r.n)
-           for r in manifest_commit.read_state(spark, table).collect()}
-    assert got == {"1995-01-01": (1250, 2), "1995-01-02": (500, 1)}
-
-
 def test_manifest_raises_on_foreign_checkpoint_gap(spark, tmp_path):
     """A fresh checkpoint pointed at an existing state table restarts
     batch ids at 0 while the table watermark is high; the fold must
@@ -2677,6 +2629,109 @@ def test_manifest_raises_on_foreign_checkpoint_gap(spark, tmp_path):
     assert calls["n"] == 0
     with pytest.raises(RuntimeError, match="checkpoint"):
         counting(b, 0)      # fresh-checkpoint signature: refuse
+
+
+def test_manifest_replay_skip_needs_the_committing_query(spark, tmp_path):
+    """The committed tail batch id is skipped only when it comes from
+    the streaming query that committed it. Another query's batch 0 (a
+    fresh checkpoint) against a table whose watermark is 0 raises
+    instead of being silently dropped, and so does a direct call; the
+    same for the CDC wrapper. Spark sets ``sql.streaming.queryId``
+    inside foreachBatch; here the test sets it on its own thread."""
+    import os
+
+    from sparkstreamingproject_spark.streaming.manifest_commit import (
+        cdc_commit, cdc_foreach_batch, manifest_foreach_batch)
+    from sparkstreamingproject_spark.streaming.rollup_maintain import (
+        merge_rollup)
+
+    sc = spark.sparkContext
+    key = "sql.streaming.queryId"
+    table, root = str(tmp_path / "rollup"), str(tmp_path / "cdc")
+    os.makedirs(root)
+    b = spark.createDataFrame([("1995-01-01", 10.0)],
+                              "o_orderdate string, o_totalprice double")
+    calls = []
+
+    def rollup(df, i):
+        calls.append(("rollup", i))
+        merge_rollup(df, table, batch_id=i)
+
+    def route(df, i):
+        calls.append(("cdc", i))
+        cdc_commit(root, i, None, {})
+
+    try:
+        for fold in (manifest_foreach_batch(rollup, table),
+                     cdc_foreach_batch(route, root)):
+            sc.setLocalProperty(key, "query-a")
+            fold(b, 0)      # commits under query-a
+            fold(b, 0)      # query-a's replay of its tail: skipped
+            sc.setLocalProperty(key, "query-b")
+            with pytest.raises(RuntimeError, match="checkpoint"):
+                fold(b, 0)  # a fresh checkpoint's batch 0: refused
+            sc.setLocalProperty(key, None)
+            with pytest.raises(RuntimeError, match="checkpoint"):
+                fold(b, 0)  # a direct call is not query-a either
+            sc.setLocalProperty(key, "query-a")
+            fold(b, 1)      # query-a goes on
+    finally:
+        sc.setLocalProperty(key, None)
+    assert calls == [("rollup", 0), ("rollup", 1), ("cdc", 0), ("cdc", 1)]
+    assert [r.n for r in read_state(spark, table).collect()] == [2]
+
+
+def test_hll_stream_after_direct_backfill_raises(spark, tmp_path):
+    """A direct backfill call commits watermark 0 with no query id.
+    The stream started next delivers its own batch 0, which must fail
+    the query rather than be skipped as a replay (its rows would be
+    lost); the backfilled state stays as it was."""
+    from datetime import datetime, timezone
+
+    from pyspark.errors import StreamingQueryException
+
+    from sparkstreamingproject_spark.streaming.hll_maintain import (
+        hll_rollup_stream, merge_hll_registers)
+
+    t = datetime(2024, 1, 1, 10, tzinfo=timezone.utc)
+    sch = "user_id long, ts timestamp"
+    table = str(tmp_path / "hll")
+    hist = spark.createDataFrame([(i, t) for i in range(40)], sch)
+    merge_hll_registers(hist, table)
+    before = sorted(map(tuple, read_state(spark, table).collect()))
+    land = str(tmp_path / "land")
+    spark.createDataFrame([(i, t) for i in range(40, 80)], sch) \
+        .write.parquet(land)
+    q = hll_rollup_stream(file_stream(spark, land, hist.schema), table,
+                          str(tmp_path / "ck"))
+    with pytest.raises(StreamingQueryException, match="checkpoint"):
+        q.awaitTermination(180)
+    assert sorted(map(tuple, read_state(spark, table).collect())) == before
+
+
+def test_replaced_state_refuses_old_layout_and_backward_commit(spark,
+                                                               tmp_path):
+    """Parquet at the table path with no manifest is the retired
+    rename-aside layout: folding into it or reading it raises rather
+    than starting from empty state beside the old data. A commit below
+    the watermark raises and leaves the watermark where it was."""
+    from sparkstreamingproject_spark.streaming.manifest_commit import (
+        manifest_info)
+
+    sch = "k long, v string, ver long"
+    upd = spark.createDataFrame([(2, "b", 1)], sch)
+    old = str(tmp_path / "dim_old")
+    spark.createDataFrame([(1, "a", 1)], sch).write.parquet(old)
+    with pytest.raises(RuntimeError, match="rename-aside layout"):
+        upsert_dim_parquet(upd, old, ["k"], "ver", 0)
+    with pytest.raises(RuntimeError, match="rename-aside layout"):
+        read_dim(spark, old)
+
+    table = str(tmp_path / "dim")
+    upsert_dim_parquet(upd, table, ["k"], "ver", 5)
+    with pytest.raises(ValueError, match="backwards"):
+        upsert_dim_parquet(upd, table, ["k"], "ver", 0)
+    assert manifest_info(table)[1] == 5
 
 
 def test_manifest_gc_retains_previous_committed_version(spark, tmp_path):
@@ -2708,6 +2763,23 @@ def test_manifest_gc_retains_previous_committed_version(spark, tmp_path):
         lazy.collect()
     del stale
 
+    # a directory at the table path itself (not a version dir) must
+    # survive commits untouched: generic GC never deletes data it
+    # cannot prove it owns
+    import os as _os
+    from sparkstreamingproject_spark.streaming.manifest_commit import (
+        commit_state)
+    tbl2 = str(tmp_path / "rollup2")
+    _os.makedirs(f"{tbl2}/day=1")
+    with open(f"{tbl2}/day=1/part-0.parquet", "w") as f:
+        f.write("opaque")
+    for bid in (0, 1, 2):
+        commit_state(
+            spark.createDataFrame([("d", bid)], "day string, n long"),
+            tbl2, batch_id=bid)
+    assert _os.path.isdir(f"{tbl2}/day=1")  # foreign data untouched
+    assert [r.n for r in read_state(spark, tbl2).collect()] == [2]
+
 
 def test_maintain_readers_empty_before_first_commit(spark, tmp_path):
     """read_trending_topk / read_bars on a never-committed table
@@ -2725,6 +2797,13 @@ def test_maintain_readers_empty_before_first_commit(spark, tmp_path):
                             "high_cents", "low_cents", "volume",
                             "n_ticks"]
     assert bars.count() == 0
+
+    # pre-first-commit info on a path whose PARENT directory does not
+    # exist reports empty state, not an error (ADVICE r13)
+    from sparkstreamingproject_spark.streaming import manifest_commit
+    ghost = str(tmp_path / "no_such_parent" / "tbl")
+    assert manifest_commit.manifest_info(ghost) == (None, -1)
+    assert manifest_commit.read_state(spark, ghost) is None
 
 
 def test_semantic_refresh_retrain_equals_scaled_batch(spark, tmp_path,
@@ -2936,64 +3015,6 @@ def test_semantic_state_guards_legacy_tree_and_foreign_data(
     assert not _os.path.exists(stc)  # clean tree GC'd by next commit
 
 
-def test_cdc_manifest_adopts_legacy_marker_layout(spark, tmp_path):
-    """Upgrading a CDC output from the r12 marker layout
-    (facts/batch_id=N partitions + dim/<t> swap_in tables) to the
-    manifest protocol must ADOPT the legacy data: readers see it, the
-    watermark resumes after the highest complete legacy batch, and
-    the next dim merge folds ON TOP of the adopted snapshot."""
-    from sparkstreamingproject_spark.streaming.cdc_router import (
-        route_cdc_batch)
-    from sparkstreamingproject_spark.streaming.manifest_commit import (
-        cdc_manifest_info, read_cdc_dim, read_cdc_facts)
-
-    out = str(tmp_path / "routed")
-    # legacy facts: one complete per-batch dir, topic-partitioned
-    legacy_facts = spark.createDataFrame(
-        [("ORDER_INFO_I", '{"id":"1"}'), ("ORDER_INFO_U", '{"id":"2"}')],
-        "topic string, value string")
-    (legacy_facts.write.mode("overwrite").partitionBy("topic")
-     .parquet(f"{out}/facts/batch_id=0"))
-    # legacy dim: swap_in layout — parquet directly at dim/<t>, in the
-    # router's dim_rows shape (key, table, id, value, ts)
-    legacy_dim = spark.createDataFrame(
-        [("DIM:USER_INFO:u1", "user_info", "u1", '{"name":"alice"}', 100)],
-        "key string, table string, id string, value string, ts long")
-    legacy_dim.coalesce(1).write.parquet(f"{out}/dim/user_info")
-
-    m = cdc_manifest_info(out)  # first touch adopts
-    assert m["batch_id"] == 0 and m["facts"] == {"0": "legacy-0"}
-    facts = read_cdc_facts(spark, out)
-    assert facts.count() == 2
-    assert {r.topic for r in facts.collect()} == \
-        {"ORDER_INFO_I", "ORDER_INFO_U"}
-    dim = read_cdc_dim(spark, out, "user_info")
-    assert [(r.id, r.value, r.ts) for r in dim.collect()] == \
-        [("u1", '{"name":"alice"}', 100)]
-
-    # a post-upgrade batch merges on top of the adopted dim snapshot
-    cfg = tmp_path / "routing.json"
-    cfg.write_text(json.dumps({"fact_tables": ["order_info"],
-                               "dim_tables": ["user_info"]}))
-    batch = cdc_df(spark, n=20)
-    route_cdc_batch(batch, 1, out, str(cfg))
-    dim2 = read_cdc_dim(spark, out, "user_info")
-    got = {r.id: r.value for r in dim2.collect()}
-    assert got.get("u1") == '{"name":"alice"}'  # adopted row survived
-    assert len(got) > 1              # plus the new batch's dim rows
-
-    # mixed legacy/new fact read after the post-upgrade commit: the
-    # declared schema keeps batch_id stable regardless of which footer
-    # Spark would sample — adopted rows NULL, new rows as written
-    facts2 = read_cdc_facts(spark, out)
-    assert "batch_id" in facts2.columns
-    by_val = {r.value: r.batch_id for r in facts2.collect()}
-    assert by_val['{"id":"1"}'] is None and by_val['{"id":"2"}'] is None
-    new_ids = {v for k, v in by_val.items()
-               if k not in ('{"id":"1"}', '{"id":"2"}')}
-    assert new_ids == {1} and len(by_val) > 2
-
-
 @pytest.mark.slow
 def test_cdc_manifest_crash_point_sweep_converges(spark, tmp_path,
                                                   monkeypatch):
@@ -3073,101 +3094,6 @@ def test_cdc_manifest_crash_point_sweep_converges(spark, tmp_path,
             spark, out, "user_info").collect())
         assert got_facts == ref_facts, f"facts diverged at point {point}"
         assert got_dim == ref_dim, f"dim diverged at point {point}"
-
-
-@pytest.mark.smoke
-def test_adoption_resume_after_crash_windows(spark, tmp_path):
-    """The adoption paths are themselves crash-resumable: (a) a
-    single-table adoption that crashed between the rename and the
-    manifest write (orphan .v-legacy-* dir, no manifest) is finished
-    on the next touch instead of reporting empty state; (b) a CDC dim
-    adoption that crashed after parking the table at <t>.adopt-<token>
-    is moved into version shape and adopted; (c) a CDC FACT adoption
-    that crashed after the batch_id=N -> commit=legacy-N renames but
-    before the manifest write is re-discovered through the token's
-    embedded batch id (ADVICE r13: those dirs were invisible to the
-    batch_id=* resume scan and permanently GC'd at the next commit)."""
-    from sparkstreamingproject_spark.streaming import manifest_commit
-    from sparkstreamingproject_spark.streaming.manifest_commit import (
-        cdc_manifest_info, read_cdc_dim, read_cdc_facts, read_state)
-
-    # (a) single-table: only the orphan version dir exists
-    table = str(tmp_path / "rollup")
-    spark.createDataFrame([("d", 1)], "day string, n long") \
-        .coalesce(1).write.parquet(f"{table}.v-legacy-deadbeef")
-    token, wm = manifest_commit.manifest_info(table)
-    assert token == "legacy-deadbeef" and wm == -1
-    assert [(r.day, r.n) for r in read_state(spark, table).collect()] \
-        == [("d", 1)]
-
-    # (b) CDC dim: data parked at the adopt staging name
-    out = str(tmp_path / "routed")
-    staged = f"{out}/dim/user_info.adopt-legacy-cafe1234"
-    spark.createDataFrame(
-        [("DIM:USER_INFO:u9", "user_info", "u9", '{"x":1}', 5)],
-        "key string, table string, id string, value string, ts long") \
-        .coalesce(1).write.parquet(staged)
-    m = cdc_manifest_info(out)
-    assert m["dims"] == {"user_info": "legacy-cafe1234"}
-    dim = read_cdc_dim(spark, out, "user_info")
-    assert [(r.id, r.ts) for r in dim.collect()] == [("u9", 5)]
-
-    # (c) CDC facts: a crashed adoption renamed batch_id={0,2} to
-    # commit=legacy-{0,2} and died pre-manifest, while batch_id=1
-    # was not yet renamed — the resume must fold BOTH shapes in and
-    # set the watermark to the highest adopted id
-    out2 = str(tmp_path / "routed_facts")
-    for n, shape in ((0, "commit=legacy-0"), (1, "batch_id=1"),
-                     (2, "commit=legacy-2")):
-        spark.createDataFrame([("T", f'{{"id":"{n}"}}')],
-                              "topic string, value string") \
-            .write.partitionBy("topic") \
-            .parquet(f"{out2}/facts/{shape}")
-    m2 = cdc_manifest_info(out2)
-    assert m2["facts"] == {"0": "legacy-0", "1": "legacy-1",
-                           "2": "legacy-2"}
-    assert m2["batch_id"] == 2
-    facts = read_cdc_facts(spark, out2)
-    assert sorted(r.value for r in facts.collect()) == \
-        ['{"id":"0"}', '{"id":"1"}', '{"id":"2"}']
-    # adopted rows carry no batch_id data column -> declared-schema NULL
-    assert [r.batch_id for r in facts.collect()] == [None] * 3
-
-    # (d) pre-first-commit info on a path whose PARENT directory does
-    # not exist must report empty state, not raise (ADVICE r13)
-    ghost = str(tmp_path / "no_such_parent" / "tbl")
-    assert manifest_commit.manifest_info(ghost) == (None, -1)
-    assert read_state(spark, ghost) is None
-
-    # (e) stray facts/ entries that merely LOOK like resumed legacy
-    # commits (non-numeric id, or no _SUCCESS marker) must neither
-    # wedge cdc_manifest_info nor be adopted into the manifest —
-    # only a genuine renamed-complete-batch dir qualifies (r14
-    # self-review)
-    import os as _os
-    out3 = str(tmp_path / "routed_stray")
-    fr = f"{out3}/facts"
-    _os.makedirs(f"{fr}/commit=legacy-notanumber")
-    _os.makedirs(f"{fr}/commit=legacy-7")  # dir but NO _SUCCESS
-    spark.createDataFrame([("T", "v")], "topic string, value string") \
-        .write.partitionBy("topic").parquet(f"{fr}/commit=legacy-1")
-    m3 = cdc_manifest_info(out3)
-    assert m3["facts"] == {"1": "legacy-1"} and m3["batch_id"] == 1
-
-    # (f) a directory at a single-table state path that adoption
-    # DECLINED (no top-level parquet/_SUCCESS — e.g. a partitioned
-    # legacy layout) must survive commits untouched: generic GC never
-    # deletes data it cannot prove it owns (r14 self-review)
-    tbl2 = str(tmp_path / "rollup2")
-    _os.makedirs(f"{tbl2}/day=1")
-    with open(f"{tbl2}/day=1/part-0.parquet", "w") as f:
-        f.write("opaque")
-    for bid in (0, 1, 2):
-        manifest_commit.commit_state(
-            spark.createDataFrame([("d", bid)], "day string, n long"),
-            tbl2, batch_id=bid)
-    assert _os.path.isdir(f"{tbl2}/day=1")  # foreign data untouched
-    assert [r.n for r in read_state(spark, tbl2).collect()] == [2]
 
 
 def test_paragraph_fold_stream_equals_batch(spark, tmp_path, sf_dir):
